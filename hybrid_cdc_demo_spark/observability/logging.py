@@ -78,6 +78,19 @@ def log_batch(stats: dict) -> None:
     _emit("batch_processed", **stats)
 
 
+def log_dlq_write_failure(destination: str, error_type: str, exc: BaseException) -> None:
+    """A DLQ write that failed: the rows it carried are NOT quarantined
+    (the pipeline keeps running, so this line is their only trace)."""
+    _emit(
+        "dlq_write_failed",
+        logging.ERROR,
+        destination=destination,
+        error_type=error_type,
+        exception=type(exc).__name__,
+        message=str(exc)[:500],
+    )
+
+
 def log_sink_error(destination: str, error_type: str, attempts: int) -> None:
     _emit(
         "sink_error",

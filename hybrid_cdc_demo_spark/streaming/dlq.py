@@ -2,13 +2,18 @@
 
 Failed/invalid events are appended as JSON partitioned by
 (destination, date); DLQ write failure never crashes the pipeline
-(writer.py:92-94). Reading back is a plain spark.read.json.
+(writer.py:92-94), but it is never silent either: it is logged and
+counted as ``cdc_dlq_write_failures_total{destination}``. Reading back
+is a plain spark.read.json.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from hybrid_cdc_demo_spark.observability.logging import log_dlq_write_failure
+from hybrid_cdc_demo_spark.observability.metrics import MetricsRegistry
 
 
 def write_dlq(
@@ -17,17 +22,21 @@ def write_dlq(
     destination: str,
     error_type: str,
     error_message_col: str | None = None,
+    metrics: MetricsRegistry | None = None,
 ) -> None:
     """Append failed events to the DLQ, date/destination-partitioned."""
-    enriched = (
-        df.withColumn("destination", F.lit(destination))
-        .withColumn("error_type", F.lit(error_type))
-        .withColumn(
-            "error_message",
-            F.col(error_message_col) if error_message_col else F.lit(error_type),
-        )
-        .withColumn("failed_at", F.current_timestamp())
-        .withColumn("dlq_date", F.to_date(F.current_timestamp()))
+    # one projection: each withColumn is a plan analysis of its own,
+    # and this write sits on the micro-batch's critical path
+    enriched = df.withColumns(
+        {
+            "destination": F.lit(destination),
+            "error_type": F.lit(error_type),
+            "error_message": (
+                F.col(error_message_col) if error_message_col else F.lit(error_type)
+            ),
+            "failed_at": F.current_timestamp(),
+            "dlq_date": F.to_date(F.current_timestamp()),
+        }
     )
     try:
         (
@@ -35,8 +44,10 @@ def write_dlq(
             .partitionBy("destination", "dlq_date")
             .json(dlq_path)
         )
-    except Exception:  # noqa: BLE001 — DLQ must never crash the pipeline
-        pass
+    except Exception as exc:  # noqa: BLE001 — DLQ must never crash the pipeline
+        log_dlq_write_failure(destination, error_type, exc)
+        if metrics is not None:
+            metrics.inc("cdc_dlq_write_failures_total", destination=destination)
 
 
 def read_dlq(spark: SparkSession, dlq_path: str) -> DataFrame:

@@ -10,7 +10,13 @@ Per micro-batch (foreachBatch — the reference's batch loop O19):
 4. mask PII/PHI payload fields in one projection (O11-O14),
 5. fan out to the three sink personalities with per-sink error
    isolation + retry; failed sinks route events to the DLQ
-   (O20/O29/O30),
+   (O20/O29/O30). A small trigger (previous batch at most
+   ``_ARROW_FANOUT_MAX_ROWS`` valid rows) collects its
+   valid rows once as Arrow and the sinks write their segments with
+   pyarrow, no Spark job per sink; a larger one caches them and
+   writes each sink with a Spark job. Either way the control
+   aggregate and the invalid-row DLQ write start with the batch and
+   run beside it,
 6. each sink commits its batch ledger row (O25-O27), giving
    checkpoint + ledger + idempotent-merge exactly-once.
 
@@ -21,6 +27,7 @@ Captured → Validated → Masked → Replicated → Committed
 
 from __future__ import annotations
 
+import inspect
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -48,7 +55,28 @@ from hybrid_cdc_demo_spark.streaming.sinks import (
     AppendSink,
     HypertableSink,
     UpsertSink,
+    arrow_timezone_ok,
+    stamp_time_zone,
 )
+
+
+def _writes_arrow(sink) -> bool:
+    """True when ``sink`` takes a ``pyarrow.Table``: an UpsertSink
+    (HypertableSink included) or AppendSink whose ``write_batch`` is
+    its own — not replaced on the instance, or replaced by a
+    ``functools.wraps`` wrapper of its own bound method (a tracer's
+    span, say). Every other sink is handed a DataFrame."""
+    if not isinstance(sink, (UpsertSink, AppendSink)):
+        return False
+    own = vars(sink).get("write_batch")
+    return own is None or getattr(inspect.unwrap(own), "__self__", None) is sink
+
+
+#: Arrow fan-out cap (rows): while the previous batch had at most this
+#: many valid rows, a trigger collects ``valid`` once as Arrow (see
+#: CDCPipeline._arrow_fanout_rows). It bounds the driver memory of that
+#: collect, not a measured crossover.
+_ARROW_FANOUT_MAX_ROWS = 50_000
 
 
 @dataclass
@@ -109,34 +137,34 @@ class PipelineConfig:
     #: window (tests/test_streaming.py::
     #: test_pii_column_added_mid_stream_is_masked).
     auto_evolve: bool = True
-    #: compute the per-key latest-wins flag ONCE in the cached batch
-    #: (__latest) and let every same-keyed upsert sink filter it
-    #: map-side, instead of each sink running its own window shuffle.
-    #: MEASURED trade-off (r9 A/B, interleaved, calibration-stable):
-    #: at the SLO batch size (~2k rows, 1-partition exchanges) the
-    #: extra window SERIALIZES into the pre-fan-out job and costs more
-    #: than the per-sink shuffles it removes (median batch 0.80 s vs
-    #: 0.71 s) because the per-sink collapses overlap inside the
-    #: parallel fan-out — so the default is OFF. Turn it on for large
-    #: triggers / many upsert destinations, where one multi-partition
-    #: shuffle replacing N is the right trade.
+    #: compute the per-key latest-wins flag ONCE in the batch
+    #: (__latest) and let every same-keyed upsert sink filter on it
+    #: instead of collapsing keys itself. MEASURED (interleaved, ~2k-row
+    #: triggers, 4 vCPU): on the Spark fan-out (r9) the extra window
+    #: serializes into the materialize job and costs more than the
+    #: per-sink shuffles it removes (median batch 0.80 vs 0.71 s); on
+    #: the Arrow fan-out it rides the one collect job and saves each
+    #: upsert sink an in-memory sort of a few ms — a tie (0.414 vs
+    #: 0.413 s, 25 pairs). Default OFF; it could only pay on the Spark
+    #: fan-out of large triggers with many upsert destinations, which
+    #: was never measured.
     share_latest_flag: bool = False
     #: compute the control counts (invalid/foreign/quality) via a
-    #: CollectMetrics (observe) node riding the valid-materialize job
-    #: — zero extra Spark jobs per trigger — instead of a separate
-    #: aggregate job submitted inside the fan-out pool. Both paths
+    #: CollectMetrics (observe) node riding the materialize job (the
+    #: Arrow collect or the Spark cache fill) — one Spark job fewer per
+    #: trigger — instead of a separate aggregate job. Both paths
     #: produce identical counts (same aggregate expressions over the
-    #: same rows). MEASURED trade-off (r10 interleaved A/B, 4 pairs,
-    #: calibration-stable 0.26-0.35 s probes, tools/ab_replay.py): at
-    #: SLO batch size the observe path LOSES slightly — batch median
-    #: 0.618 vs 0.594 s, median worst 1.18 vs 1.05 s, p99 tied — the
-    #: CollectMetrics evaluation + listener-bus wait sit in the SERIAL
-    #: materialize step, while the control-agg job it removes ran
-    #: concurrently with the sink writes and was never on the critical
-    #: path. Default OFF (the r9 shape). Turn it on when driver job
-    #: SCHEDULING is the constrained resource (hundreds of concurrent
-    #: streams per driver, scheduler-queue-bound deployments) — it
-    #: trades a few ms of serial latency for one fewer job per trigger.
+    #: same rows). MEASURED trade-off: the separate job is submitted
+    #: BEFORE the materialize job and runs beside it, so the control
+    #: counts and the invalid-row DLQ write cost no latency; in observe
+    #: mode the counts exist only once the materialize job is done, so
+    #: the DLQ write starts after it, on the critical path. On the
+    #: Arrow fan-out at ~2k-row triggers (4 vCPU, 25 interleaved pairs)
+    #: the median batch went 0.41 → 0.56 s with observe on (r10, Spark
+    #: fan-out, control job after the materialize job: 0.594 → 0.618
+    #: s). Default OFF. Turn it on only when driver job SCHEDULING is
+    #: the constrained resource (hundreds of concurrent streams per
+    #: driver).
     control_counts_via_observe: bool = False
     #: AQE for the pipeline's micro-batch jobs. Default OFF: the
     #: micro-batcher already sizes shuffle partitions to observed
@@ -232,6 +260,7 @@ class CDCPipeline:
         #: shuffle-partition sizing (None until the first batch lands)
         self._last_batch_rows: int | None = None
         self._control_aggs = self._build_control_aggs()
+        self._drift_flag = self._build_drift_flag()
         #: source-lag backlog listener (attached by start() for
         #: byte-offset sources, detached by restore_confs)
         self._backlog_listener = None
@@ -387,15 +416,12 @@ class CDCPipeline:
         self._checks = self._build_checks()
         self._masked_payload = self._build_masked_payload()
         self._control_aggs = self._build_control_aggs()
+        self._drift_flag = self._build_drift_flag()
 
     def split_valid(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Stage 1+2: corrupt / contract-violating rows out (O7/O8)."""
-        flagged = batch.withColumn("__valid", self._checks)
-        valid = flagged.filter(F.col("__valid")).drop("__valid")
-        invalid = flagged.filter(~F.coalesce(F.col("__valid"), F.lit(False))).drop(
-            "__valid"
-        )
-        return valid, invalid
+        ok = F.coalesce(self._checks, F.lit(False))
+        return batch.filter(ok), batch.filter(~ok)
 
     def dedup(self, batch: DataFrame) -> DataFrame:
         """Stage 3 (O28): duplicate-delivery removal by event_id."""
@@ -423,8 +449,8 @@ class CDCPipeline:
 
         Also derives key_hash: the masked replica key (partition-key
         values hashed, so the replica never stores raw keys)."""
-        return batch.withColumn("key_hash", self._key_hash).withColumn(
-            "columns_masked", self._masked_payload
+        return batch.withColumns(
+            {"key_hash": self._key_hash, "columns_masked": self._masked_payload}
         )
 
     def unknown_columns(self, batch: DataFrame) -> DataFrame:
@@ -442,38 +468,151 @@ class CDCPipeline:
 
     # -- micro-batch processor ----------------------------------------
 
+    def _arrow_fanout_rows(self, session: SparkSession) -> int | None:
+        """Row cap of the Arrow fan-out for THIS trigger, or None for
+        the Spark fan-out.
+
+        A trigger whose previous batch had at most
+        ``_ARROW_FANOUT_MAX_ROWS`` valid rows collects ``valid`` once
+        as Arrow (at most cap + 1 rows: a surge past the cap is
+        detected by the collect itself and goes to the Spark fan-out
+        without reaching the driver whole), and every Arrow-capable
+        sink writes its segment with pyarrow. The first trigger of a
+        pipeline has no previous size and takes the Spark fan-out. The
+        Arrow side also needs a session time zone Arrow can locate (the
+        hypertable's chunk date is derived in it).
+
+        No crossover was found, measured with
+        ``tools/arrow_crossover.py`` (4 vCPU, ``local[4]``, 2 GB driver
+        heap, one envelope file per trigger, 6 interleaved pairs per
+        size; median ``process_batch`` seconds):
+
+        ==========  =====  =====  ===========
+        valid rows  Arrow  Spark  Arrow/Spark
+        ==========  =====  =====  ===========
+        2,000       0.58   0.82   0.71
+        10,000      0.80   1.31   0.61
+        25,000      1.40   1.80   0.78
+        50,000      2.60   2.97   0.87
+        100,000     4.08   4.47   0.91
+        200,000     7.97   9.07   0.88
+        ==========  =====  =====  ===========
+
+        So the cap is not where the Arrow fan-out stops winning; it
+        bounds driver memory. At 50,000 rows the collected table is
+        ~28 MB in the driver JVM while it is served and again in
+        Python, and each upsert sink sorts its own copy. A host with
+        more cores gives the Spark fan-out's parallel writes more room;
+        that was not measured.
+
+        A surge right after a small trigger pays for the aborted
+        collect (``tools/arrow_crossover.py --surge``, same host, the
+        surge's ``process_batch`` with the gate open vs closed): 4.19
+        vs 3.31 s at 60,000 rows, 5.89 vs 5.16 s at 100,000, 12.5 vs
+        11.7 s at 200,000 — the cap + 1 rows it converts and serves.
+        ``valid`` is cached before the collect, so the Spark fan-out
+        does not recompute the batch; without that cache the surge
+        took 5.81 vs 3.91 s at 60,000 rows."""
+        cap = _ARROW_FANOUT_MAX_ROWS
+        if (
+            self._last_batch_rows is None
+            or self._last_batch_rows > cap
+            or not arrow_timezone_ok(session.conf.get("spark.sql.session.timeZone"))
+        ):
+            return None
+        return cap
+
+    def _build_drift_flag(self) -> F.Column:
+        """Per-row schema-drift probe: payload columns outside the
+        registered schema, or a known column arriving under a new JSON
+        class (e.g. a registered bigint as "thirty") — the ALTER path
+        the supervisor classifies as compatible widening or
+        incompatible narrowing."""
+        schema = self.registry.latest(self.config.keyspace, self.config.table)
+        if not self.config.auto_evolve or schema is None:
+            return F.lit(False)
+        from hybrid_cdc_demo_spark.schema.evolution import _json_class
+
+        known = F.array(*[F.lit(c) for c in schema.columns])
+        drift_flag = F.size(F.array_except(F.json_object_keys("columns"), known)) > 0
+        for name, cql in schema.columns.items():
+            jc = _json_class(cql)
+            if jc == "string":
+                continue  # any JSON value reads back as text
+            v = F.get_json_object("columns", f"$.{name}")
+            if jc == "number":
+                bad = v.isNotNull() & v.try_cast("double").isNull()
+            else:  # boolean
+                bad = v.isNotNull() & ~F.lower(v).isin("true", "false")
+            drift_flag = drift_flag | bad
+        return drift_flag
+
+    def _to_dlq(self, df: DataFrame, destination: str, error_type: str) -> None:
+        write_dlq(
+            df, self.config.dlq_path, destination, error_type, metrics=self.metrics
+        )
+
+    def _record_control(self, stats: dict, rows: list) -> None:
+        """Control-stream counts into ``stats`` and the error counters."""
+        errors = {
+            "invalid": ("validation", "contract_violation"),
+            "quality_failed": ("quality", "quality_violation"),
+        }
+        for name, n in rows:
+            stats[name] = n
+            if n and name in errors:
+                destination, error_type = errors[name]
+                self.metrics.inc(
+                    "cdc_errors_total",
+                    n,
+                    destination=destination,
+                    error_type=error_type,
+                )
+
     def process_batch(self, batch: DataFrame, batch_id: int) -> dict:
         # under foreachBatch `batch` is bound to the streaming query's
         # cloned session (confs latched at query start — start() sizes
         # them); for direct calls this is the caller's session
         session = batch.sparkSession
         parts = self._batch_partitions()
+        arrow_rows = self._arrow_fanout_rows(session)
         prev_parts = session.conf.get("spark.sql.shuffle.partitions")
         session.conf.set("spark.sql.shuffle.partitions", str(parts))
         # narrow (no shuffle) so every downstream job over the cached
         # batch runs batch-sized task counts, not source-split counts
         batch = batch.coalesce(parts).persist()
         valid = None
+        # control aggregate, control task and one task per sink; shut
+        # down (waiting) before the caches are released
+        pool = ThreadPoolExecutor(max_workers=2 + len(self.sinks))
         try:
-            # Control-plane counts ride the materialize job for FREE
-            # (VERDICT r9 #2): a CollectMetrics (observe) node above
-            # the scope filter computes the invalid/foreign/quality
-            # counts from the rows already streaming through the
-            # valid-materialize aggregate below — the control
-            # aggregates stopped being their own Spark job. (Measured
-            # alternative, rejected: dropping the materialize job and
-            # letting the 3 fan-out jobs race to compute the cold
-            # `valid` cache raised median batch time 0.68→0.74 s and
-            # the per-sink writes ~45% — block-level compute locking
-            # serializes the racers; tools/batch_profile.py, PERF.md.)
+            # The control aggregate and its DLQ writes race the
+            # materialize job below ON PURPOSE: they only need the
+            # cached batch, and beside it they cost no latency, so the
+            # aggregate is submitted before anything else is planned.
+            # Measured (4 vCPU, 2k-row triggers): with the Arrow
+            # fan-out, perfbench cdc_trickle's median batch fell from
+            # 0.774 to 0.396 s (10 interleaved pairs); the same fan-out
+            # with the DLQ write started after the collect instead
+            # (observe mode) took 0.56 s against 0.41 s. The control
+            # path still ends ~0.1 s after the ~20 ms Arrow writes: the
+            # invalid-row DLQ write is the critical path of a small
+            # trigger. (Also measured and rejected: letting the three
+            # Spark sink writes race to compute the cold `valid`
+            # instead of materializing it first — 0.68→0.74 s,
+            # block-level compute locking serializes the racers.)
             if self.config.control_counts_via_observe:
                 from pyspark.sql import Observation
 
                 ctrl_obs = Observation(f"ctrl-{batch_id}")
                 observed = batch.observe(ctrl_obs, *self._control_aggs)
+                control_agg = None
             else:
                 ctrl_obs = None
                 observed = batch
+                control_agg = pool.submit(
+                    lambda: batch.agg(*self._control_aggs).collect()[0]
+                )
             # O6 scope filter runs FIRST: corrupt rows parse to null
             # keyspace/table and must still reach the DLQ, so the
             # invalid split keeps null-scope rows while foreign-table
@@ -490,55 +629,87 @@ class CDCPipeline:
                 valid, quality_bad = gate(valid, self._quality_rules)
             else:
                 quality_bad = None
+            counts: dict = {}
+
+            def control_task():
+                # invalid (O7 DLQ), foreign-table skips (O6: reference
+                # reader.py:186-188 skips silently, we count), and
+                # quality-gate failures. In observe mode the counts
+                # rode the materialize job's CollectMetrics, so a clean
+                # batch submits ZERO Spark jobs here; otherwise they
+                # come from the early aggregate job. The split frames
+                # are only scanned for the (rare) nonzero DLQ writes.
+                crow = counts if control_agg is None else control_agg.result()
+                inv = int(crow["invalid"] or 0)
+                if inv:
+                    self._to_dlq(invalid, "validation", "contract_violation")
+                out = [("invalid", inv), ("foreign_skipped", int(crow["foreign_skipped"] or 0))]
+                if quality_bad is not None:
+                    nq = int(crow["quality_failed"] or 0)
+                    if nq:
+                        # declarative DQ gate failures: quarantined,
+                        # never replicated, never crash the pipeline
+                        self._to_dlq(quality_bad, "quality", "quality_violation")
+                    out.append(("quality_failed", nq))
+                return out
+
+            ctrl = None if control_agg is None else pool.submit(control_task)
             valid = self.mask(self.dedup(valid))
             if self.config.share_latest_flag:
-                # one window shuffle per batch instead of one per
-                # upsert sink (see PipelineConfig.share_latest_flag
-                # for the measured small-batch trade-off)
+                # one window per batch instead of one per upsert sink
+                # (see PipelineConfig.share_latest_flag)
                 valid = self._flag_latest(valid)
+            # Cached on both fan-outs: the first job below fills the
+            # cache, so the sink writes (and DataFrame-only sinks on the
+            # Arrow fan-out) read warm data, and a surge that the
+            # limited collect detects is not computed a second time.
             valid = valid.persist()
-            schema = self.registry.latest(self.config.keyspace, self.config.table)
-            if self.config.auto_evolve and schema is not None:
-                from hybrid_cdc_demo_spark.schema.evolution import _json_class
+            table = None
+            if arrow_rows is not None:
+                # THE serial driver job of a small trigger: one Arrow
+                # collect of the transformed batch gives the sinks their
+                # rows, the O19 stat and the schema-drift probe at once
+                import pyarrow.compute as pc
 
-                known = F.array(*[F.lit(c) for c in schema.columns])
-                drift_flag = (
-                    F.size(F.array_except(F.json_object_keys("columns"), known)) > 0
+                table = (
+                    valid.withColumn("__drift", self._drift_flag)
+                    .limit(arrow_rows + 1)
+                    .toArrow()
                 )
-                # drift is ALSO a known column arriving under a new
-                # JSON class (e.g. a registered bigint as "thirty") —
-                # the ALTER path the supervisor classifies as
-                # compatible widening or incompatible narrowing
-                for name, cql in schema.columns.items():
-                    jc = _json_class(cql)
-                    if jc == "string":
-                        continue  # any JSON value reads back as text
-                    v = F.get_json_object("columns", f"$.{name}")
-                    if jc == "number":
-                        bad = v.isNotNull() & v.try_cast("double").isNull()
-                    else:  # boolean
-                        bad = v.isNotNull() & ~F.lower(v).isin("true", "false")
-                    drift_flag = drift_flag | bad
-            else:
-                drift_flag = F.lit(False)
-            # THE one serial driver job per trigger (VERDICT r9 #2):
-            # materialize the transformed batch into cache so the
-            # parallel fan-out reads warm data instead of racing
-            # cold-cache partitions; the same job computes the O19
-            # stat, the schema-drift probe, AND (via the observe node
-            # upstream) every control count — no second aggregate job.
-            row = valid.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(drift_flag.cast("int")).alias("drift"),
-            ).collect()[0]
-            counts = {"n": row["n"], "drift": row["drift"]}
+                # the zone the gate checked is the one HypertableSink
+                # derives `_chunk` in (the sinks' own session may differ)
+                tz = session.conf.get("spark.sql.session.timeZone")
+                if table.num_rows > arrow_rows:
+                    table = None  # a surge: Spark fan-out
+                else:
+                    counts.update(
+                        n=table.num_rows, drift=pc.any(table["__drift"]).as_py()
+                    )
+                    table = stamp_time_zone(table.drop_columns(["__drift"]), tz)
+            if table is None:
+                # THE serial driver job of the Spark fan-out: materialize
+                # the transformed batch into cache (already filled after
+                # a surge) so the parallel sink writes read warm data
+                # instead of racing cold-cache partitions; the same job
+                # computes the O19 stat and the schema-drift probe
+                row = valid.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(self._drift_flag.cast("int")).alias("drift"),
+                ).collect()[0]
+                counts.update(n=row["n"], drift=row["drift"])
             if ctrl_obs is not None:
                 # the observation is filled by the job above (its rows
-                # flowed through the CollectMetrics node); .get only
-                # blocks on the listener-bus delivery, not on a new job
+                # flowed through the CollectMetrics node below the
+                # blocking dedup aggregate, so a limited collect still
+                # counted every row); .get only blocks on the
+                # listener-bus delivery, not on a new job
                 counts.update(ctrl_obs.get)
-            stats = {"batch_id": batch_id, "valid": counts["n"]}
-            self._last_batch_rows = int(counts["n"] or 0)
+                ctrl = pool.submit(control_task)
+            n_valid = int(counts["n"] or 0)
+            path = "spark" if table is None else "arrow"
+            stats = {"batch_id": batch_id, "valid": n_valid, "write_path": path}
+            self.metrics.inc("cdc_batches_total", path=path)
+            self._last_batch_rows = n_valid
 
             if counts["drift"]:
                 outcome = self.evolution.observe_batch(
@@ -562,9 +733,9 @@ class CDCPipeline:
                     # closed here because the expressions are unbound
                     # Columns, one driver-side rebuild away).
                     self.refresh_plan_expressions()
-                    remasked = self.mask(
-                        valid.drop("key_hash", "columns_masked")
-                    ).persist()
+                    remasked = self.mask(valid.drop("key_hash", "columns_masked")).persist()
+                    if table is not None:
+                        table = stamp_time_zone(remasked.toArrow(), tz)
                     valid.unpersist()
                     valid = remasked
                 if outcome["action"] == "incompatible":
@@ -572,110 +743,48 @@ class CDCPipeline:
                     # the table's events to the DLQ, sinks untouched
                     # (__latest is in-flight upsert metadata, not part
                     # of the DLQ'd envelope)
-                    write_dlq(
-                        valid.drop("__latest"),
-                        self.config.dlq_path,
-                        destination="schema",
-                        error_type="schema_incompatible",
-                    )
+                    self._to_dlq(valid.drop("__latest"), "schema", "schema_incompatible")
                     self.metrics.inc(
                         "cdc_errors_total",
-                        int(counts["n"] or 0),
+                        n_valid,
                         destination="schema",
                         error_type="schema_incompatible",
                     )
-                    # the invalid split must ALSO persist before the
-                    # early return — foreachBatch completing advances
-                    # the checkpoint, so a merely-counted row is gone
-                    stats["invalid"] = (
-                        int(counts["invalid"] or 0)
-                        if ctrl_obs is not None
-                        else invalid.count()
-                    )
-                    if stats["invalid"]:
-                        # same counter the normal fan-out path emits —
-                        # validation errors must not undercount just
-                        # because a schema break coincided
-                        self.metrics.inc(
-                            "cdc_errors_total",
-                            stats["invalid"],
-                            destination="validation",
-                            error_type="contract_violation",
-                        )
-                        write_dlq(
-                            invalid,
-                            self.config.dlq_path,
-                            destination="validation",
-                            error_type="contract_violation",
-                        )
+                    # the control task already persisted the invalid
+                    # (and quality) splits — foreachBatch completing
+                    # advances the checkpoint, so a merely-counted row
+                    # would be gone
+                    self._record_control(stats, ctrl.result())
                     return stats
 
             # multi-sink fan-out with per-sink isolation (O20: one
             # failing destination never blocks the others). Concurrent
-            # threads submit independent Spark jobs over the same
-            # cached batch — the reference's asyncio.gather(main.py:148)
-            # expressed as parallel job submission. DLQ routing of the
-            # invalid split rides the same pool.
-            def control_task():
-                # invalid (O7 DLQ), foreign-table skips (O6: reference
-                # reader.py:186-188 skips silently, we count), and
-                # quality-gate failures. In observe mode the counts
-                # already rode the materialize job's CollectMetrics, so
-                # on a clean batch this task submits ZERO Spark jobs;
-                # in the fallback mode it runs the one aggregate job
-                # over the cached batch (the r9 shape). Either way the
-                # split frames are only scanned for the (rare) nonzero
-                # DLQ writes.
-                crow = (
-                    counts
-                    if ctrl_obs is not None
-                    else batch.agg(*self._control_aggs).collect()[0]
-                )
-                out = []
-                inv = int(crow["invalid"] or 0)
-                if inv:
-                    write_dlq(
-                        invalid,
-                        self.config.dlq_path,
-                        destination="validation",
-                        error_type="contract_violation",
-                    )
-                out.append(("invalid", inv, None))
-                out.append(("foreign_skipped", int(crow["foreign_skipped"] or 0), None))
-                if quality_bad is not None:
-                    nq = int(crow["quality_failed"] or 0)
-                    if nq:
-                        # declarative DQ gate failures: quarantined,
-                        # never replicated, never crash the pipeline
-                        write_dlq(
-                            quality_bad,
-                            self.config.dlq_path,
-                            destination="quality",
-                            error_type="quality_violation",
-                        )
-                    out.append(("quality_failed", nq, None))
-                return out
-
+            # threads write the sinks — the reference's
+            # asyncio.gather(main.py:148) expressed as parallel writes:
+            # Spark jobs over the cached batch, or pyarrow writes of the
+            # collected table for sinks that take one.
             def one_sink(item):
                 name, sink = item
                 # O34: every buffered-but-uncommitted event counts as
                 # backlog for this destination until its write commits
                 # (reference set_backlog, metrics.py:84-86)
-                self.metrics.set_gauge(
-                    "cdc_backlog_depth", int(counts["n"] or 0), destination=name
-                )
+                self.metrics.set_gauge("cdc_backlog_depth", n_valid, destination=name)
                 # the shared __latest flag is only valid for sinks
                 # keyed exactly like the pipeline — a foreign sink
                 # (user-attached, different key_cols) must not trust a
                 # flag computed on someone else's keys
-                batch_for_sink = (
-                    valid
-                    if list(getattr(sink, "key_cols", ())) == list(self.config.key_cols)
-                    else valid.drop("__latest")
+                own_keys = list(getattr(sink, "key_cols", ())) == list(
+                    self.config.key_cols
                 )
+                if table is not None and _writes_arrow(sink):
+                    data = table
+                    if not own_keys and "__latest" in table.column_names:
+                        data = table.drop_columns(["__latest"])
+                else:
+                    data = valid if own_keys else valid.drop("__latest")
                 try:
                     return name, with_retry(
-                        lambda: sink.write_batch(batch_for_sink, batch_id),
+                        lambda: sink.write_batch(data, batch_id),
                         self.config.retry,
                         # reference increment_retries (metrics.py:68-70):
                         # one tick per re-attempt of this destination
@@ -686,17 +795,9 @@ class CDCPipeline:
                 except Exception as exc:  # noqa: BLE001
                     return name, -1, exc
 
-            tasks = [control_task] + [
-                (lambda item=item: one_sink(item)) for item in self.sinks.items()
-            ]
-            with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-                raw = [f.result() for f in [pool.submit(t) for t in tasks]]
-            # control_task yields a triple per control stream
-            results = []
-            for r in raw:
-                results.extend(r if isinstance(r, list) else [r])
-            sink_names = set(self.sinks)
-            for name, written, exc in results:
+            writes = [pool.submit(one_sink, item) for item in self.sinks.items()]
+            self._record_control(stats, ctrl.result())
+            for name, written, exc in [w.result() for w in writes]:
                 stats[name] = written
                 if exc is not None:
                     self.sink_errors[name] = self.sink_errors.get(name, 0) + 1
@@ -708,13 +809,8 @@ class CDCPipeline:
                     log_sink_error(
                         name, type(exc).__name__, self.sink_errors[name]
                     )
-                    write_dlq(
-                        valid.drop("__latest"),
-                        self.config.dlq_path,
-                        destination=name,
-                        error_type=type(exc).__name__,
-                    )
-                elif name in sink_names:
+                    self._to_dlq(valid.drop("__latest"), name, type(exc).__name__)
+                else:
                     # committed: destination-labelled processed counter
                     # (reference increment_events_processed) and the
                     # backlog drains to zero
@@ -727,25 +823,13 @@ class CDCPipeline:
                     self.metrics.set_gauge(
                         "cdc_backlog_depth", 0, destination=name
                     )
-                elif name == "invalid" and written:
-                    self.metrics.inc(
-                        "cdc_errors_total",
-                        written,
-                        destination="validation",
-                        error_type="contract_violation",
-                    )
-                elif name == "quality_failed" and written:
-                    self.metrics.inc(
-                        "cdc_errors_total",
-                        written,
-                        destination="quality",
-                        error_type="quality_violation",
-                    )
             log_batch(stats)
             return stats
         finally:
-            # release BOTH caches — a per-second trigger that only
+            # wait for the control task before its cached input goes;
+            # then release BOTH caches — a per-second trigger that only
             # persists would accumulate stale blocks for the whole run
+            pool.shutdown(wait=True)
             if valid is not None:
                 valid.unpersist()
             batch.unpersist()

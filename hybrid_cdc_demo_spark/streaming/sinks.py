@@ -38,6 +38,8 @@ Delta in this container; on a real deployment the same class maps
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 import shutil
@@ -274,6 +276,94 @@ def latest_per_key(
     )
 
 
+def latest_rows_arrow(
+    table, key_cols: list[str], ts_col: str = "timestamp_micros",
+    tiebreak_col: str = "event_id",
+):
+    """Arrow twin of :func:`latest_per_key` for driver-sized batches:
+    sort by key ascending, ``ts_col`` and ``tiebreak_col`` descending,
+    and keep the first row of every key (null keys form one group, as
+    in a Spark window partition). The result comes out clustered by
+    key."""
+    import numpy as np
+    import pyarrow as pa
+
+    ordered = table.sort_by(
+        [(k, "ascending") for k in key_cols]
+        + [(ts_col, "descending"), (tiebreak_col, "descending")]
+    )
+    first = (
+        ordered.select(key_cols)
+        .append_column("__i", pa.array(np.arange(ordered.num_rows)))
+        .group_by(key_cols, use_threads=False)
+        .aggregate([("__i", "min")])
+    )
+    return ordered.take(first["__i_min"])
+
+
+#: schema-metadata key of an Arrow batch's session time zone (see
+#: :func:`stamp_time_zone`)
+_TZ_KEY = b"spark.sql.session.timeZone"
+
+
+def stamp_time_zone(table, time_zone: str):
+    """Record on an Arrow batch the session time zone of the Spark
+    session it was collected in. HypertableSink derives ``_chunk`` in
+    that zone, so the Arrow write agrees with the Spark write of the
+    same batch even when the sink's own session has another zone."""
+    return table.replace_schema_metadata(
+        {**(table.schema.metadata or {}), _TZ_KEY: time_zone}
+    )
+
+
+def _write_hadoop_crc(part: Path) -> None:
+    """Write the ``.<name>.crc`` sidecar Hadoop's local file system
+    keeps next to every file it writes (``crc\\0``, bytes per checksum,
+    then one big-endian CRC32 per 512-byte chunk). Spark verifies it on
+    every read, so a pyarrow-written file gets the same corruption
+    check as a Spark-written one."""
+    import struct
+    import zlib
+
+    data = part.read_bytes()
+    sums = b"".join(
+        struct.pack(">I", zlib.crc32(data[i:i + 512]))
+        for i in range(0, len(data), 512)
+    )
+    (part.parent / f".{part.name}.crc").write_bytes(
+        b"crc\0" + struct.pack(">i", 512) + sums
+    )
+
+
+def _write_arrow_segment(
+    table, seg: Path, ts_col: str = "timestamp_micros"
+) -> tuple[int, int | None]:
+    """Write ``table`` as the one-file segment ``seg`` with pyarrow —
+    no Spark job. The file (with its Hadoop checksum) lands in a
+    directory under the hidden ``.arrow-tmp`` (outside the ``seg-*`` /
+    ``*seg-*`` globs that sinks and stream consumers list) that is then
+    ``os.replace``d into place, so readers see the segment whole, and a
+    replay of the same batch replaces it (overwrite-by-batch-id); the
+    then empty ``.arrow-tmp`` is removed unless a crashed write left
+    something in it. Returns what :func:`_segment_stats` reads from
+    the footers, taken from the in-memory table instead."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tmp = seg.parent / ".arrow-tmp" / seg.name
+    shutil.rmtree(tmp, ignore_errors=True)
+    tmp.mkdir(parents=True)
+    part = tmp / "part-00000.parquet"
+    pq.write_table(table.replace_schema_metadata(None), str(part))
+    _write_hadoop_crc(part)
+    shutil.rmtree(seg, ignore_errors=True)
+    os.replace(tmp, seg)
+    with contextlib.suppress(OSError):
+        tmp.parent.rmdir()
+    mx = pc.max(table[ts_col]).as_py() if ts_col in table.column_names else None
+    return table.num_rows, mx
+
+
 def _segment_stats(
     seg_dir: Path, ts_col: str = "timestamp_micros"
 ) -> tuple[int, int | None]:
@@ -342,6 +432,9 @@ class UpsertSink:
     def _augment(self, df: DataFrame) -> DataFrame:
         return df
 
+    def _augment_arrow(self, table):
+        return table
+
     partition_cols: list[str] | None = None
 
     def _segments(self) -> list[Path]:
@@ -350,23 +443,33 @@ class UpsertSink:
     def _l1_runs(self) -> list[Path]:
         return sorted(self.l1_path.glob("run-*"))
 
-    def write_batch(self, batch: DataFrame, batch_id: int) -> int:
+    def write_batch(self, batch, batch_id: int) -> int:
+        """Append ``batch``'s latest row per key as segment
+        ``batch_id``. ``batch`` is a DataFrame (Spark writes the
+        segment) or a ``pyarrow.Table`` the pipeline already collected
+        for a small trigger (pyarrow writes it, no Spark job)."""
         if self.ledger.is_committed(batch_id):
             return 0
-        if "__latest" in batch.columns:
-            # the pipeline pre-computed the latest-wins flag inside the
-            # shared cached batch (one window shuffle for ALL upsert
-            # sinks instead of one per sink); this write is then a
-            # map-only filter over warm cache
-            incoming = batch.filter(F.col("__latest")).drop("__latest")
-        else:
-            incoming = latest_per_key(batch, self.key_cols)
-        incoming = self._augment(incoming)
         # overwrite-by-batchId → crash between write and ledger commit
         # replays into the SAME segment, never duplicating data
         seg = self.delta_path / f"seg-{batch_id:012d}"
-        incoming.write.mode("overwrite").parquet(str(seg))
-        n, max_ts = _segment_stats(seg)
+        if not isinstance(batch, DataFrame):
+            if "__latest" in batch.column_names:
+                incoming = batch.filter(batch["__latest"]).drop_columns(["__latest"])
+            else:
+                incoming = latest_rows_arrow(batch, self.key_cols)
+            n, max_ts = _write_arrow_segment(self._augment_arrow(incoming), seg)
+        else:
+            if "__latest" in batch.columns:
+                # the pipeline pre-computed the latest-wins flag inside
+                # the shared cached batch (one window shuffle for ALL
+                # upsert sinks instead of one per sink); this write is
+                # then a map-only filter over warm cache
+                incoming = batch.filter(F.col("__latest")).drop("__latest")
+            else:
+                incoming = latest_per_key(batch, self.key_cols)
+            self._augment(incoming).write.mode("overwrite").parquet(str(seg))
+            n, max_ts = _segment_stats(seg)
         self.ledger.commit(
             batch_id,
             {
@@ -543,26 +646,44 @@ class AppendSink:
         #: rmtree an entry that optimize holds in its snapshot
         self._log_lock = threading.Lock()
 
-    def write_batch(self, batch: DataFrame, batch_id: int) -> int:
+    def write_batch(self, batch, batch_id: int) -> int:
+        """Append ``batch`` as log segment ``batch_id``. ``batch`` is a
+        DataFrame (Spark writes the segment) or a ``pyarrow.Table``
+        (pyarrow writes it, no Spark job); see UpsertSink.write_batch.
+        Either way every row carries ``_batch_id`` as a long."""
         if self.ledger.is_committed(batch_id):
             return 0
-        # append personality stores EVERY row; the pipeline's shared
-        # latest-wins flag (see UpsertSink.write_batch) is upsert-only
-        # metadata and must not reach the log
-        if "__latest" in batch.columns:
-            batch = batch.drop("__latest")
-        if self.delete_policy == "skip":
-            # reference parity: DELETEs dropped with a warning
-            # (clickhouse.py:109-116) — a documented divergence source
-            out = batch.filter(F.col("event_type") != "DELETE")
-        else:
-            out = batch  # tombstones resolve in the dedup view
-        out = out.withColumn("_batch_id", F.lit(batch_id))
         # per-batch segment dir + overwrite = idempotent under replay
         seg = self.data_path / f"seg-{batch_id:012d}"
-        out.write.mode("overwrite").parquet(str(seg))
-        self._persist_schema(out)
-        n, max_ts = _segment_stats(seg)
+        # append personality stores EVERY row; the pipeline's shared
+        # latest-wins flag (see UpsertSink.write_batch) is upsert-only
+        # metadata and must not reach the log. Under the skip policy
+        # DELETEs are dropped (reference parity, clickhouse.py:109-116 —
+        # a documented divergence source); under tombstone they resolve
+        # in the dedup view.
+        if not isinstance(batch, DataFrame):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            out = batch
+            if "__latest" in out.column_names:
+                out = out.drop_columns(["__latest"])
+            if self.delete_policy == "skip":
+                out = out.filter(pc.not_equal(out["event_type"], "DELETE"))
+            out = out.append_column(
+                "_batch_id", pa.repeat(pa.scalar(batch_id, pa.int64()), out.num_rows)
+            )
+            n, max_ts = _write_arrow_segment(out, seg)
+            self._persist_schema(from_arrow_schema(out.schema))
+        else:
+            out = batch.drop("__latest")
+            if self.delete_policy == "skip":
+                out = out.filter(F.col("event_type") != "DELETE")
+            out = out.withColumn("_batch_id", F.lit(batch_id).cast("long"))
+            out.write.mode("overwrite").parquet(str(seg))
+            self._persist_schema(out.schema)
+            n, max_ts = _segment_stats(seg)
         self.ledger.commit(
             batch_id,
             {
@@ -591,7 +712,7 @@ class AppendSink:
             self._optimize_future.result()
             self._optimize_future = None
 
-    def _persist_schema(self, df: DataFrame) -> None:
+    def _persist_schema(self, schema) -> None:
         """Record the FULL projected batch schema once (first write),
         so an empty log reads back with the same columns AND types a
         populated one would — a consumer selecting a payload column
@@ -615,7 +736,7 @@ class AppendSink:
             return dt
 
         tmp = self.path / "._schema.json.tmp"
-        tmp.write_text(nullable(df.schema).json())
+        tmp.write_text(nullable(schema).json())
         os.replace(tmp, sidecar)
 
     def _log_entries(self) -> list[tuple[int, int, Path]]:
@@ -645,14 +766,41 @@ class AppendSink:
         live.sort(key=lambda e: e[0])
         return live
 
+    def _log_schema(self):
+        """The persisted first-write schema with ``_batch_id`` as long,
+        or None before the first write. Logs written before
+        ``_batch_id`` had one declared type recorded it as int (and
+        store int in their early segments); every read pins this
+        schema, so old int and new long segments read back together as
+        long, and optimize folds them into long consolidations."""
+        sidecar = self.path / "_schema.json"
+        if not sidecar.exists():
+            return None
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        schema = StructType.fromJson(json.loads(sidecar.read_text()))
+        return StructType(
+            [
+                StructField(f.name, LongType(), True) if f.name == "_batch_id" else f
+                for f in schema
+            ]
+        )
+
+    def _read_log(self, entries) -> DataFrame:
+        """Scan of the given log entries under the pinned
+        :meth:`_log_schema` (inferred from the footers only if the
+        first write's sidecar is missing)."""
+        reader = self.spark.read.option("ignoreMissingFiles", "true")
+        schema = self._log_schema()
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[str(p) for _, _, p in entries])
+
     def _empty_frame(self) -> DataFrame:
         """Empty log with the persisted first-write schema (or the
         minimal dedup-view columns before any write)."""
-        sidecar = self.path / "_schema.json"
-        if sidecar.exists():
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(sidecar.read_text()))
+        schema = self._log_schema()
+        if schema is not None:
             return self.spark.createDataFrame([], schema)
         fields = ", ".join(
             [f"`{k}` string" for k in self.key_cols]
@@ -665,10 +813,7 @@ class AppendSink:
         entries = self._log_entries()
         if not entries:
             return self._empty_frame()
-        return (
-            self.spark.read.option("ignoreMissingFiles", "true")
-            .parquet(*[str(p) for _, _, p in entries])
-        )
+        return self._read_log(entries)
 
     def optimize(self, upto_batch: int | None = None, min_segments: int = 4) -> int:
         """Small-file consolidation (Delta OPTIMIZE / ClickHouse merge
@@ -753,9 +898,7 @@ class AppendSink:
             # already one consolidation covering the range — nothing to
             # fold (a rewrite would only churn bytes)
             return 0
-        df = self.spark.read.option("ignoreMissingFiles", "true").parquet(
-            *[str(p) for _, _, p in entries]
-        )
+        df = self._read_log(entries)
         tmp = self.data_path / f".tmp-cseg-{lo:012d}-{hi:012d}"
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.mode("overwrite").parquet(str(tmp))
@@ -791,9 +934,7 @@ class AppendSink:
         if not entries:
             # same empty-schema contract as read_raw
             return self.read_raw().limit(0)
-        df = self.spark.read.option("ignoreMissingFiles", "true").parquet(
-            *[str(p) for _, _, p in entries]
-        )
+        df = self._read_log(entries)
         if any(hi > batch_id for _, hi, _ in entries):
             df = df.filter(F.col("_batch_id") <= batch_id)
         return df
@@ -876,15 +1017,12 @@ class AppendSink:
             history = "segments" if self.keep_segments_for_streams else "all"
         if history not in ("segments", "all"):
             raise ValueError(f"history must be 'segments' or 'all', got {history!r}")
-        sidecar = self.path / "_schema.json"
-        if not sidecar.exists():
+        schema = self._log_schema()
+        if schema is None:
             raise ValueError(
                 "as_stream needs at least one committed batch (the "
                 "_schema.json sidecar) to pin the source schema"
             )
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(sidecar.read_text()))
         glob = "seg-*" if history == "segments" else "*seg-*"
         return (
             spark.readStream.schema(schema)
@@ -912,9 +1050,7 @@ class AppendSink:
         ]
         if not entries:
             return self.read_raw().limit(0)
-        df = self.spark.read.option("ignoreMissingFiles", "true").parquet(
-            *[str(p) for _, _, p in entries]
-        )
+        df = self._read_log(entries)
         if any(lo <= after_batch or hi > upto_batch for lo, hi, _ in entries):
             df = df.filter(
                 (F.col("_batch_id") > after_batch)
@@ -1102,6 +1238,39 @@ class HypertableSink(UpsertSink):
         return df.withColumn(
             "_chunk", F.to_date(F.timestamp_micros(F.col(self.time_col)))
         )
+
+    def _augment_arrow(self, table):
+        """``_chunk`` exactly as :meth:`_augment` derives it: the date of
+        the event instant in the session time zone — the one
+        :func:`stamp_time_zone` recorded on the table (the pipeline
+        stamps its batch's session), else this sink's session. The zone
+        must be one Arrow's tz database can locate (a region id such as
+        ``America/Los_Angeles``); the pipeline only sends Arrow tables
+        when it is (``arrow_timezone_ok``)."""
+        import pyarrow as pa
+
+        tz = (table.schema.metadata or {}).get(_TZ_KEY)
+        tz = tz.decode() if tz else self.spark.conf.get("spark.sql.session.timeZone")
+        local = table[self.time_col].cast(pa.timestamp("us", tz="UTC")).cast(
+            pa.timestamp("us", tz=tz)
+        )
+        # a plain data column on the segment: only the compacted base
+        # is partitioned by it (compact's partition_by)
+        return table.append_column("_chunk", local.cast(pa.date32()))
+
+
+@functools.lru_cache(maxsize=32)
+def arrow_timezone_ok(tz: str) -> bool:
+    """True when Arrow can derive dates in session time zone ``tz``.
+    Spark also accepts offsets and short ids (``+05:30``, ``PST``) that
+    Arrow's tz database cannot locate."""
+    import pyarrow as pa
+
+    try:
+        pa.array([0], pa.timestamp("us", tz=tz)).cast(pa.date32())
+    except pa.ArrowInvalid:
+        return False
+    return True
 
 
 def replication_lag_seconds(ledger: BatchLedger, now_micros: int) -> float:

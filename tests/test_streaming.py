@@ -4,17 +4,20 @@ crash/restart, DLQ routing, DELETE policy, late data, stateful dedup).
 Deterministic: file-based envelope source + availableNow trigger."""
 
 import json
+import logging
 import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from hybrid_cdc_demo_spark.functions.masking import mask_pii_value
+from hybrid_cdc_demo_spark.observability.logging import get_logger
 from hybrid_cdc_demo_spark.schema.evolution import SchemaRegistry, TableSchema
 from hybrid_cdc_demo_spark.sources.cdc import (
     generate_change_events,
     read_envelope_batch,
 )
+import hybrid_cdc_demo_spark.streaming.pipeline as P
 from hybrid_cdc_demo_spark.streaming.pipeline import CDCPipeline, PipelineConfig
 from hybrid_cdc_demo_spark.streaming import windows as W
 
@@ -439,3 +442,185 @@ def test_sc001_ten_k_events_zero_loss_zero_duplication(spark, tmp_path):
         keys = [r["key_hash"] for r in view.select("key_hash").collect()]
         assert set(keys) == expected_keys, f"{name}: loss or phantom keys"
         assert len(keys) == len(set(keys)), f"{name}: duplicated keys"
+
+
+# -- small-trigger Arrow fan-out ---------------------------------------------
+
+
+def _digest(df):
+    """Schema plus the sorted row hashes: equal digests ⇔ the same rows
+    with the same types, whatever the row order."""
+    rows = df.select(F.sha2(F.to_json(F.struct(*df.columns)), 256)).collect()
+    return df.schema.simpleString(), sorted(r[0] for r in rows)
+
+
+def test_arrow_fanout_matches_spark_fanout(spark, tmp_path, monkeypatch):
+    """Three 2,000-event triggers: with the Arrow fan-out the first
+    trigger takes the Spark path (no previous size) and the next two
+    write their segments with pyarrow. Every sink — including one keyed
+    differently from the pipeline and a DataFrame-only sink — reads
+    back hash-identical to an all-Spark run, with the shared latest
+    flag and with observe-mode control counts too."""
+    from hybrid_cdc_demo_spark.streaming.sinks import AggregateSink, UpsertSink
+
+    src = tmp_path / "commitlog"
+    generate_change_events(str(src), n_events=6000, n_files=3, seed=9)
+
+    def run(name, **cfg):
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "commitlog").symlink_to(src)
+        p = _pipeline(spark, tmp_path / name, **cfg)
+        wh = p.config.target_dir
+        p.sinks["by_event"] = UpsertSink(spark, f"{wh}/by_event", ["event_id"])
+        p.sinks["agg"] = AggregateSink(
+            spark, f"{wh}/agg", ["key_hash"], {"events": ("event_id", "count")}
+        )
+        stats = []
+        orig = p.process_batch
+        p.process_batch = lambda df, bid: stats.append(orig(df, bid))
+        p.run_available()
+        assert p.sink_errors == {}
+        ch = p.sinks["clickhouse"]
+        reads = {n: _digest(s.read()) for n, s in p.sinks.items()}
+        reads["asof"] = _digest(ch.read_asof(1))
+        reads["changes"] = _digest(ch.changes_between(0, 2))
+        return stats, reads, p.metrics.snapshot()["counters"]
+
+    with monkeypatch.context() as m:
+        m.setattr(P, "_ARROW_FANOUT_MAX_ROWS", 0)  # the gate closed
+        ref_stats, ref_reads, _ = run("ref")
+    assert [s.pop("write_path") for s in ref_stats] == ["spark"] * 3
+    variants = [{}, {"share_latest_flag": True}, {"control_counts_via_observe": True}]
+    for i, cfg in enumerate(variants):
+        stats, reads, counters = run(f"arrow-{i}", **cfg)
+        assert [s.pop("write_path") for s in stats] == ["spark", "arrow", "arrow"], cfg
+        assert stats == ref_stats, cfg
+        assert counters['cdc_batches_total{path="arrow"}'] == 2
+        for name in ref_reads:
+            assert reads[name] == ref_reads[name], (cfg, name)
+
+
+def test_surge_past_the_cap_takes_spark_path_never_collected_whole(spark, tmp_path, monkeypatch):
+    """A small trigger opens the Arrow gate for the next one; when that
+    next one is a surge past the cap, the bounded collect (cap + 1 rows)
+    detects it and the surge goes through the Spark fan-out —
+    never collected whole to the driver — and the trigger after the
+    surge stays on Spark. Results stay exact."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    src = tmp_path / "commitlog"
+    for i, (n, seed) in enumerate([(300, 1), (2000, 2), (300, 3), (300, 4)]):
+        generate_change_events(
+            str(src), n_events=n, n_files=1, seed=seed, file_prefix=f"{i}-wave",
+            base_micros=1_700_000_000_000_000 + i * 10**12,
+        )
+        os.utime(src / f"{i}-wave-0000.json", (1_700_000_000 + i, 1_700_000_000 + i))
+    collected = []
+    to_arrow = ClassicDataFrame.toArrow
+
+    def spy(self):
+        table = to_arrow(self)
+        collected.append(table.num_rows)
+        return table
+
+    monkeypatch.setattr(ClassicDataFrame, "toArrow", spy)
+    cap = 1000
+    monkeypatch.setattr(P, "_ARROW_FANOUT_MAX_ROWS", cap)
+    p = _pipeline(spark, tmp_path)
+    stats = []
+    orig = p.process_batch
+    p.process_batch = lambda df, bid: stats.append(orig(df, bid))
+    p.run_available()
+
+    assert [s["write_path"] for s in stats] == ["spark", "spark", "spark", "arrow"]
+    assert stats[1]["valid"] > cap
+    # the surge's collect stopped at cap + 1; only the last trigger's
+    # whole batch reached the driver
+    assert collected == [cap + 1, stats[3]["valid"]]
+    expected = _expected_latest(spark, str(src))
+    exp_keys = {
+        r["kh"]
+        for r in expected.select(F.sha2(F.to_json("partition_key"), 256).alias("kh")).collect()
+    }
+    for name in ("postgres", "timescaledb"):
+        got = {r["key_hash"] for r in p.sinks[name].read().select("key_hash").collect()}
+        assert got == exp_keys, name
+
+
+def test_dlq_write_failure_is_logged_and_counted(spark, tmp_path):
+    """A DLQ that cannot be written never crashes the pipeline, but the
+    loss is not silent: the batch commits to every sink and
+    cdc_dlq_write_failures_total{destination} ticks."""
+    generate_change_events(str(tmp_path / "commitlog"), n_events=600, n_files=1, seed=42)
+    p = _pipeline(spark, tmp_path)
+    os.makedirs(p.config.target_dir, exist_ok=True)
+    with open(p.config.dlq_path, "w") as fh:  # a file where the DLQ dir goes
+        fh.write("not a directory")
+    records = []
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    keep = Keep()
+    get_logger().addHandler(keep)
+    try:
+        p.run_available()
+    finally:
+        get_logger().removeHandler(keep)
+
+    assert [r.fields["destination"] for r in records if r.getMessage() == "dlq_write_failed"] == [
+        "validation"
+    ]
+    for sink in p.sinks.values():
+        assert len(sink.ledger.committed_batches()) == 1
+    counters = p.metrics.snapshot()["counters"]
+    assert counters['cdc_errors_total{destination="validation",error_type="contract_violation"}'] > 0
+    assert counters['cdc_dlq_write_failures_total{destination="validation"}'] == 1
+
+
+def test_arrow_chunk_dates_follow_the_batch_session_zone(spark, tmp_path):
+    """Under foreachBatch a batch belongs to the stream's session, whose
+    time zone can differ from the session the sinks were built on. On
+    both fan-outs the hypertable's `_chunk` follows the batch's zone —
+    the one the Arrow gate checked."""
+    la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    paths = generate_change_events(
+        str(tmp_path / "commitlog"), n_events=1200, n_files=2, seed=3,
+        base_micros=1_700_006_400_000_000 - 150_000_000,  # 2023-11-15 UTC
+    )
+    p = _pipeline(spark, tmp_path)
+    assert spark.conf.get("spark.sql.session.timeZone") != "America/Los_Angeles"
+    paths_taken = [
+        p.process_batch(read_envelope_batch(la, path), bid)["write_path"]
+        for bid, path in enumerate(paths)
+    ]
+    assert paths_taken == ["spark", "arrow"]
+    for seg in sorted((tmp_path / "warehouse" / "timescaledb" / "delta").glob("seg-*")):
+        chunks = {r["_chunk"].isoformat() for r in spark.read.parquet(str(seg)).collect()}
+        assert chunks == {"2023-11-14"}, seg.name
+
+
+def test_arrow_writers_include_sinks_behind_tracing_wrappers(spark, tmp_path):
+    """A built-in sink keeps taking Arrow tables when its write_batch is
+    wrapped on the instance with functools.wraps (a tracer's span);
+    a replacement of another kind, or a DataFrame-only sink, gets a
+    DataFrame."""
+    import functools
+
+    from hybrid_cdc_demo_spark.streaming.sinks import AggregateSink
+
+    p = _pipeline(spark, tmp_path)
+    pg, ch = p.sinks["postgres"], p.sinks["clickhouse"]
+    own = pg.write_batch
+
+    @functools.wraps(own)
+    def traced(*a, **kw):
+        return own(*a, **kw)
+
+    pg.write_batch = traced
+    ch.write_batch = lambda batch, batch_id: 0
+    agg = AggregateSink(spark, str(tmp_path / "agg"), ["key_hash"], {"n": ("event_id", "count")})
+    assert P._writes_arrow(pg) and P._writes_arrow(p.sinks["timescaledb"])
+    assert not P._writes_arrow(ch) and not P._writes_arrow(agg)

@@ -4,6 +4,7 @@ batch committed, and the scan must plan only the prefix's segment
 files (file-level pruning, not a post-hoc filter)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from hybrid_cdc_demo_spark.streaming.sinks import AppendSink, latest_per_key
 
@@ -327,3 +328,193 @@ def test_upsert_compaction_clusters_base_by_key(spark, tmp_path):
             checked += 1
     # the clustered view still reads correctly
     assert sink.read().count() == 2000
+
+
+# -- Arrow-written segments (the pipeline's small-trigger fan-out) -------
+
+#: events straddle 2023-11-15 00:00 UTC, which is still 11-14 in Los
+#: Angeles: the hypertable's chunk date must follow the session zone
+_MIDNIGHT_UTC = 1_700_006_400_000_000
+
+
+def _digest(df):
+    """Schema plus the sorted row hashes: equal digests ⇔ the same rows
+    with the same types, whatever the row order."""
+    rows = df.select(F.sha2(F.to_json(F.struct(*df.columns)), 256)).collect()
+    return df.schema.simpleString(), sorted(r[0] for r in rows)
+
+
+def _valid_batches(spark, tmp_path, n_files=3):
+    """Pipeline-shaped batches (validated, deduplicated, masked), one
+    per generated envelope file, plus an empty one at the end."""
+    from hybrid_cdc_demo_spark.sources.cdc import (
+        generate_change_events,
+        read_envelope_batch,
+    )
+    from hybrid_cdc_demo_spark.streaming.pipeline import CDCPipeline, PipelineConfig
+
+    paths = generate_change_events(
+        str(tmp_path / "src"), n_events=600, n_files=n_files, seed=5,
+        base_micros=_MIDNIGHT_UTC - 150_000_000,
+    )
+    p = CDCPipeline(spark, PipelineConfig(str(tmp_path / "src"), str(tmp_path / "wh")))
+    batches = [
+        p.mask(p.dedup(p.split_valid(read_envelope_batch(spark, path))[0]))
+        for path in paths
+    ]
+    return batches + [batches[0].limit(0)]
+
+
+def test_batch_id_is_long_before_and_after_first_write(spark, tmp_path):
+    """One declared `_batch_id` type: the pre-first-write frame, a
+    Spark-written log and an Arrow-written log all read it as long, and
+    the two written logs (and their sidecar-typed empty reads) have
+    equal schemas."""
+    from pyspark.sql.types import LongType
+
+    df = _valid_batches(spark, tmp_path, n_files=1)[0]
+    empty = AppendSink(spark, str(tmp_path / "e"), ["key_hash"]).read_raw()
+    by_spark = AppendSink(spark, str(tmp_path / "s"), ["key_hash"])
+    by_spark.write_batch(df, batch_id=0)
+    by_arrow = AppendSink(spark, str(tmp_path / "a"), ["key_hash"])
+    by_arrow.write_batch(df.toArrow(), batch_id=0)
+    s, a = by_spark.read_raw().schema, by_arrow.read_raw().schema
+    assert s == a
+    assert by_spark.read_raw_asof(-1).schema == by_arrow.read_raw_asof(-1).schema == s
+    for f in empty.schema:
+        assert s[f.name].dataType == f.dataType, f.name
+    assert s["_batch_id"].dataType == LongType()
+
+
+def test_arrow_and_spark_segments_read_back_identical(spark, tmp_path):
+    """The same batches written once through Spark and once as Arrow
+    tables read back hash-identical through every sink read — upsert,
+    hypertable (deltas, then its compacted `_chunk` partitions), the
+    append log's dedup view, AS OF and change feed — including an empty
+    batch, under a non-UTC session time zone."""
+    from hybrid_cdc_demo_spark.streaming.sinks import HypertableSink, UpsertSink
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        batches = _valid_batches(spark, tmp_path)
+        sinks = {
+            side: {
+                "up": UpsertSink(spark, str(tmp_path / side / "pg"), ["key_hash"]),
+                "ht": HypertableSink(spark, str(tmp_path / side / "ts"), ["key_hash"]),
+                "ap": AppendSink(
+                    spark, str(tmp_path / side / "ch"), ["key_hash"],
+                    delete_policy="tombstone",
+                ),
+            }
+            for side in ("spark", "arrow")
+        }
+        for bid, df in enumerate(batches):
+            table = df.toArrow()
+            for kind in ("up", "ht", "ap"):
+                n_spark = sinks["spark"][kind].write_batch(df, bid)
+                assert sinks["arrow"][kind].write_batch(table, bid) == n_spark
+        assert n_spark == 0  # the empty batch
+        last = len(batches) - 1
+
+        def reads(s):
+            return {
+                "upsert": s["up"].read(),
+                "hypertable": s["ht"].read(),
+                "append": s["ap"].read(),
+                "append_raw": s["ap"].read_raw(),
+                "asof": s["ap"].read_asof(1),
+                "changes": s["ap"].changes_between(0, last),
+            }
+
+        got = {side: reads(s) for side, s in sinks.items()}
+        for name in got["spark"]:
+            assert _digest(got["arrow"][name]) == _digest(got["spark"][name]), name
+        for side in sinks:
+            sinks[side]["ht"].compact()
+        parts = {
+            side: sorted(p.name for p in (tmp_path / side / "ts" / "data" / "v=1").glob("_chunk=*"))
+            for side in sinks
+        }
+        # one Los Angeles day, where UTC would have split the events in two
+        assert parts["arrow"] == parts["spark"] == ["_chunk=2023-11-14"]
+        assert _digest(sinks["arrow"]["ht"].read()) == _digest(sinks["spark"]["ht"].read())
+        assert _digest(sinks["arrow"]["ht"].table.read()) == _digest(
+            sinks["spark"]["ht"].table.read()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_log_written_with_int_batch_id_reads_with_new_segments(spark, tmp_path):
+    """A log whose sidecar and first segment store `_batch_id` as int
+    (how the sink wrote it before the type was declared long) reads
+    back together with new Spark- and Arrow-written long segments —
+    through every read, optimize and a stream consumer."""
+    from pyspark.sql.types import LongType
+
+    df = spark.createDataFrame(BATCHES[0], SCHEMA)
+    path = tmp_path / "ch"
+    sink = AppendSink(spark, str(path), ["user_id"], delete_policy="tombstone")
+    old = df.withColumn("_batch_id", F.lit(0))  # int, as it used to be
+    old.write.parquet(str(path / "log" / "seg-000000000000"))
+    sink._persist_schema(old.schema)
+    sink.ledger.commit(0, {"destination": "clickhouse", "rows": 2})
+    sink.write_batch(spark.createDataFrame(BATCHES[1], SCHEMA), batch_id=1)
+    sink.write_batch(spark.createDataFrame(BATCHES[2], SCHEMA).toArrow(), batch_id=2)
+
+    raw = sink.read_raw()
+    before = _digest(raw)
+    assert raw.schema["_batch_id"].dataType == LongType()
+    assert sorted(r["_batch_id"] for r in raw.collect()) == [0, 0, 1, 1, 2, 2]
+    ref = _write_all(spark, str(tmp_path / "ref"))
+    assert _digest(sink.read()) == _digest(ref.read())
+    assert _digest(sink.read_asof(1)) == _digest(ref.read_asof(1))
+    assert _digest(sink.changes_between(0, 2)) == _digest(ref.changes_between(0, 2))
+    assert sink.read_raw().limit(0).schema == raw.schema
+
+    q = (
+        sink.as_stream().writeStream.format("memory").queryName("legacy_log")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    assert spark.table("legacy_log").count() == 6
+
+    assert sink.optimize(min_segments=2) == 3
+    assert _digest(sink.read_raw()) == before
+
+
+def test_arrow_segment_carries_hadoop_checksum(spark, tmp_path):
+    """A pyarrow-written segment gets the `.crc` sidecar Spark writes
+    itself, so a corrupted file fails its read instead of returning
+    wrong rows."""
+    sink = _write_all(spark, str(tmp_path / "ch"))
+    seg = tmp_path / "ch" / "log" / "seg-000000000003"
+    sink.write_batch(spark.createDataFrame(BATCHES[0], SCHEMA).toArrow(), batch_id=3)
+    assert (seg / ".part-00000.parquet.crc").exists()
+    assert sink.read_raw().count() == 8
+    part = seg / "part-00000.parquet"
+    data = bytearray(part.read_bytes())
+    data[len(data) // 2] ^= 0xFF
+    part.write_bytes(bytes(data))
+    with pytest.raises(Exception, match="(?i)checksum"):
+        sink.read_raw().collect()
+
+
+def test_arrow_chunk_follows_the_stamped_zone_not_the_sinks_session(spark, tmp_path):
+    """An Arrow batch derives `_chunk` in the zone stamped on it (the
+    pipeline stamps its batch's session), even when the sink's own
+    session runs in another zone."""
+    from hybrid_cdc_demo_spark.streaming.sinks import HypertableSink, stamp_time_zone
+
+    utc = spark.newSession()
+    utc.conf.set("spark.sql.session.timeZone", "UTC")
+    df = _valid_batches(spark, tmp_path, n_files=1)[0]
+    sink = HypertableSink(utc, str(tmp_path / "ts"), ["key_hash"])
+    sink.write_batch(stamp_time_zone(df.toArrow(), "America/Los_Angeles"), 0)
+    chunks = {r["_chunk"].isoformat() for r in sink.read().select("_chunk").collect()}
+    assert chunks == {"2023-11-14"}
+    unstamped = HypertableSink(utc, str(tmp_path / "ts-utc"), ["key_hash"])
+    unstamped.write_batch(df.toArrow(), 0)
+    chunks = {r["_chunk"].isoformat() for r in unstamped.read().select("_chunk").collect()}
+    assert chunks == {"2023-11-14", "2023-11-15"}
