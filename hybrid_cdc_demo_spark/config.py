@@ -1,25 +1,25 @@
 """Pipeline configuration layer (SURVEY O37).
 
-Semantics of the reference's config system reproduced
-(src/config/loader.py:14-46, 49-83, 112-168; src/config/settings.py:12-151):
+``load_config`` builds the ``PipelineConfig`` that ``CDCPipeline``
+consumes, with the reference's config semantics
+(src/config/loader.py:14-46, 49-83, 112-168):
 
-* typed settings with the reference's defaults — batch_size=100,
-  max_parallelism=4, max_in_flight_batches=10,
-  poll_interval_seconds=0.1 (settings.py:85-92); retry policy
-  5 attempts / 100 ms base / x2 / 30 s cap / ±25% jitter
-  (settings.py:98-106);
+* defaults are ``PipelineConfig``'s; its retry policy and masking
+  rules keep the reference's (settings.py:98-106,
+  config/masking-rules.yaml:6-18);
 * YAML config file loading (import-gated; JSON accepted as a
   fallback so the layer works without pyyaml);
 * deep merge of config dicts — nested dicts merge recursively,
   scalars/lists overwrite (loader.py:49-83);
 * environment-variable overrides with the ``CDC_`` prefix and
   ``__`` as the nesting separator (pydantic-settings convention the
-  reference uses), e.g. ``CDC_PIPELINE__BATCH_SIZE=500``;
-* validation: unknown keys rejected, types coerced, bounds checked —
-  a bad config fails at load, not mid-pipeline.
-
-Implemented on stdlib dataclasses so the engine has zero config-time
-dependencies.
+  reference uses), e.g. ``CDC_RETRY__MAX_ATTEMPTS=3``;
+* unknown keys are rejected — the reference's keys that no engine
+  code reads (``pipeline.batch_size``, ``sinks.*_enabled``, ...)
+  included — and strings are coerced to the field types. Values are
+  checked by the types that read them (``RetryPolicy``,
+  ``MaskingRules``, ``AppendSink``), so a bad config fails at load or
+  at pipeline construction, not mid-stream.
 """
 
 from __future__ import annotations
@@ -27,9 +27,11 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
-from dataclasses import dataclass, field
+import types
+import typing
 from pathlib import Path
-from typing import Any
+
+from hybrid_cdc_demo_spark.streaming.pipeline import PipelineConfig
 
 try:  # pragma: no cover - optional
     import yaml
@@ -43,88 +45,6 @@ class ConfigError(ValueError):
     pass
 
 
-@dataclass
-class PipelineSettings:
-    """settings.py:85-92 defaults."""
-
-    batch_size: int = 100
-    max_parallelism: int = 4
-    max_in_flight_batches: int = 10
-    poll_interval_seconds: float = 0.1
-
-    def validate(self) -> None:
-        if self.batch_size <= 0:
-            raise ConfigError("pipeline.batch_size must be positive")
-        if self.poll_interval_seconds < 0:
-            raise ConfigError("pipeline.poll_interval_seconds must be >= 0")
-
-
-@dataclass
-class RetrySettings:
-    """settings.py:98-106 defaults (matches streaming.retry.RetryPolicy)."""
-
-    max_attempts: int = 5
-    base_delay_seconds: float = 0.1
-    multiplier: float = 2.0
-    max_delay_seconds: float = 30.0
-    jitter_fraction: float = 0.25
-
-    def validate(self) -> None:
-        if self.max_attempts < 1:
-            raise ConfigError("retry.max_attempts must be >= 1")
-        if not (0 <= self.jitter_fraction <= 1):
-            raise ConfigError("retry.jitter_fraction must be in [0, 1]")
-
-
-@dataclass
-class MaskingSettings:
-    """config/masking-rules.yaml:6-18 defaults."""
-
-    pii_fields: list[str] = field(
-        default_factory=lambda: ["email", "phone", "ssn", "credit_card", "address"]
-    )
-    phi_fields: list[str] = field(
-        default_factory=lambda: ["medical_record_number", "patient_id"]
-    )
-    secret_key: str = "default-secret-key"
-
-    def validate(self) -> None:
-        if not self.secret_key:
-            raise ConfigError("masking.secret_key must be non-empty")
-
-
-@dataclass
-class SinkSettings:
-    """Per-destination enable flags + DELETE policy (O20/O23)."""
-
-    postgres_enabled: bool = True
-    clickhouse_enabled: bool = True
-    timescaledb_enabled: bool = True
-    delete_policy_append: str = "skip"  # reference parity | "tombstone"
-
-    def validate(self) -> None:
-        if self.delete_policy_append not in ("skip", "tombstone"):
-            raise ConfigError(
-                "sinks.delete_policy_append must be 'skip' or 'tombstone'"
-            )
-
-
-@dataclass
-class CDCSettings:
-    """Root settings object (settings.py:124-151 analogue)."""
-
-    keyspace: str = "ecommerce"
-    table: str = "users"
-    pipeline: PipelineSettings = field(default_factory=PipelineSettings)
-    retry: RetrySettings = field(default_factory=RetrySettings)
-    masking: MaskingSettings = field(default_factory=MaskingSettings)
-    sinks: SinkSettings = field(default_factory=SinkSettings)
-
-    def validate(self) -> None:
-        for section in (self.pipeline, self.retry, self.masking, self.sinks):
-            section.validate()
-
-
 def deep_merge(base: dict, override: dict) -> dict:
     """loader.py:49-83: nested dicts merge recursively; scalars and
     lists overwrite."""
@@ -135,18 +55,6 @@ def deep_merge(base: dict, override: dict) -> dict:
         else:
             out[k] = v
     return out
-
-
-def _coerce(value: str, target_type: Any) -> Any:
-    if target_type is bool:
-        return value.lower() in ("1", "true", "yes", "on")
-    if target_type is int:
-        return int(value)
-    if target_type is float:
-        return float(value)
-    if target_type in (list, "list") or str(target_type).startswith("list"):
-        return [v.strip() for v in value.split(",") if v.strip()]
-    return value
 
 
 def env_overrides(environ: dict[str, str] | None = None, prefix: str = "CDC_") -> dict:
@@ -164,46 +72,65 @@ def env_overrides(environ: dict[str, str] | None = None, prefix: str = "CDC_") -
     return out
 
 
+def _coerce(value, tp, path: str):
+    """``value`` (parsed from the file, or an env string) as field type
+    ``tp``: nested dataclasses are built, ``X | None`` accepts None,
+    strings become numbers or comma-separated lists/tuples."""
+    if typing.get_origin(tp) in (typing.Union, types.UnionType):
+        if value is None:
+            return None
+        (tp,) = [a for a in typing.get_args(tp) if a is not type(None)]
+    if dataclasses.is_dataclass(tp):
+        if not isinstance(value, dict):
+            raise ConfigError(f"'{path}' must be a mapping")
+        return _build(tp, value, f"{path}.")
+    kind = typing.get_origin(tp) or tp
+    if isinstance(value, str) and kind is not str:
+        try:
+            if kind in (list, tuple):
+                value = [v.strip() for v in value.split(",") if v.strip()]
+            elif kind in (int, float):
+                value = kind(value)
+        except ValueError as exc:
+            raise ConfigError(f"'{path}': {exc}") from exc
+    if kind is tuple and isinstance(value, list):
+        value = tuple(value)
+    elif kind is float and type(value) is int:
+        value = float(value)
+    if not isinstance(value, kind):
+        raise ConfigError(f"'{path}' must be {kind.__name__}, got {value!r}")
+    return value
+
+
 def _build(cls, data: dict, path: str = ""):
     fields = {f.name: f for f in dataclasses.fields(cls)}
     unknown = set(data) - set(fields)
     if unknown:
         raise ConfigError(f"unknown config key(s) {sorted(unknown)} at '{path or '.'}'")
-    kwargs = {}
-    for name, f in fields.items():
-        if name not in data:
-            continue
-        value = data[name]
-        if dataclasses.is_dataclass(f.type) or (
-            isinstance(f.type, str) and f.type[0].isupper()
-        ):
-            sub_cls = f.type if dataclasses.is_dataclass(f.type) else globals()[f.type]
-            if not isinstance(value, dict):
-                raise ConfigError(f"'{path}{name}' must be a mapping")
-            kwargs[name] = _build(sub_cls, value, f"{path}{name}.")
-        else:
-            if isinstance(value, str):
-                tname = f.type if isinstance(f.type, str) else getattr(
-                    f.type, "__name__", str(f.type)
-                )
-                if tname.startswith("list"):
-                    ftype = list
-                else:
-                    ftype = {"int": int, "float": float, "bool": bool}.get(
-                        tname, str
-                    )
-                value = _coerce(value, ftype)
-            kwargs[name] = value
-    return cls(**kwargs)
+    missing = sorted(
+        name
+        for name, f in fields.items()
+        if name not in data
+        and f.default is dataclasses.MISSING
+        and f.default_factory is dataclasses.MISSING
+    )
+    if missing:
+        raise ConfigError(f"missing config key(s) {missing} at '{path or '.'}'")
+    hints = typing.get_type_hints(cls)
+    kwargs = {name: _coerce(v, hints[name], path + name) for name, v in data.items()}
+    try:
+        return cls(**kwargs)
+    except ValueError as exc:
+        raise ConfigError(str(exc)) from exc
 
 
 def load_config(
     config_file: str | Path | None = None,
     overrides: dict | None = None,
     environ: dict[str, str] | None = None,
-) -> CDCSettings:
-    """defaults ← file ← explicit overrides ← env vars (highest wins),
-    then validate (loader.py:112-168 precedence)."""
+) -> PipelineConfig:
+    """defaults ← file ← explicit overrides ← env vars (highest wins)
+    (loader.py:112-168 precedence), built into a ``PipelineConfig``."""
     data: dict = {}
     if config_file is not None:
         text = Path(config_file).read_text()
@@ -217,6 +144,4 @@ def load_config(
     if overrides:
         data = deep_merge(data, overrides)
     data = deep_merge(data, env_overrides(environ))
-    settings = _build(CDCSettings, data)
-    settings.validate()
-    return settings
+    return _build(PipelineConfig, data)

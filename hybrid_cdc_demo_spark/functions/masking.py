@@ -51,6 +51,10 @@ class MaskingRules:
     phi_fields: list[str] = field(default_factory=lambda: list(DEFAULT_PHI_FIELDS))
     secret_key: str = DEFAULT_SECRET_KEY
 
+    def __post_init__(self):
+        if not self.secret_key:
+            raise ValueError("masking.secret_key must be non-empty")
+
 
 def classify_field(name: str, rules: MaskingRules | None = None) -> MaskingStrategy:
     """Substring classification; PHI takes precedence over PII

@@ -465,20 +465,8 @@ class JdbcUpsertSink:
         # matter, and a crash-replay re-applies the identical winners.
         # The window's hash-exchange also leaves partitions keyed, so
         # in partition scope no two connections ever touch one key.
-        if "__latest" in batch.columns:
-            # pipeline pre-computed the shared latest-wins flag inside
-            # the cached batch (see CDCPipeline._flag_latest): the
-            # collapse is a map-only filter over warm cache
-            import pyspark.sql.functions as F
-
-            collapsed = batch.filter(F.col("__latest")).drop("__latest")
-        else:
-            tiebreak = (
-                "event_id" if "event_id" in batch.columns else "timestamp_micros"
-            )
-            collapsed = latest_per_key(
-                batch, self.key_cols, tiebreak_col=tiebreak
-            )
+        tiebreak = "event_id" if "event_id" in batch.columns else "timestamp_micros"
+        collapsed = latest_per_key(batch, self.key_cols, tiebreak_col=tiebreak)
         projected = collapsed.select(
             "event_type", "timestamp_micros", *self.columns
         )

@@ -23,17 +23,25 @@ Per micro-batch (foreachBatch — the reference's batch loop O19):
 The pipeline state machine matches the spec's
 Captured → Validated → Masked → Replicated → Committed
 (specs/001-secure-cdc-pipeline/data-model.md:43-48).
+
+``PipelineConfig`` is the whole streaming configuration (O37):
+``config.load_config`` builds one from defaults, a YAML/JSON file,
+overrides and ``CDC_`` environment variables, and every field is one
+the pipeline reads. Strategies that lost their measured A/B (a shared
+latest-wins flag, observe-based control counts, AQE) are not options;
+process_batch records their numbers.
 """
 
 from __future__ import annotations
 
 import inspect
+import math
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from hybrid_cdc_demo_spark.functions.masking import MaskingRules, mask_phi, mask_pii
@@ -78,6 +86,13 @@ def _writes_arrow(sink) -> bool:
 #: collect, not a measured crossover.
 _ARROW_FANOUT_MAX_ROWS = 50_000
 
+#: target rows per shuffle partition of the adaptive sizing:
+#: partitions = clamp(ceil(prev_batch_rows / this), 1, cap). Local
+#: micro-batches of a few thousand rows want ONE partition (task
+#: scheduling dominates compute); production triggers with millions
+#: of rows scale up to PipelineConfig.shuffle_partitions.
+_ROWS_PER_SHUFFLE_PARTITION = 4096
+
 
 @dataclass
 class PipelineConfig:
@@ -97,15 +112,9 @@ class PipelineConfig:
     #: you tune to trigger-interval row counts, not total data size.
     #: This value is the CAP: per batch the pipeline adapts DOWN from
     #: it using the previous batch's observed row count (see
-    #: rows_per_shuffle_partition), so a small steady trigger runs
+    #: _ROWS_PER_SHUFFLE_PARTITION), so a small steady trigger runs
     #: 1-partition jobs while a surge climbs back to the cap.
     shuffle_partitions: int = 4
-    #: target rows per shuffle partition for the adaptive sizing —
-    #: partitions = clamp(ceil(prev_batch_rows / this), 1, cap). Local
-    #: micro-batches of a few thousand rows want ONE partition (task
-    #: scheduling dominates compute); production triggers with
-    #: millions of rows scale up to the cap.
-    rows_per_shuffle_partition: int = 4096
     #: trigger mode (O3): None → availableNow (drain + stop, the
     #: deterministic test/replay mode); "Ns" → processingTime
     #: continuous polling, the reference's poll_interval_seconds
@@ -126,63 +135,6 @@ class PipelineConfig:
     #: what earlier polls served; AvailableNow runs always drain
     #: fully (see CommitlogStreamReader). None = uncapped.
     max_bytes_per_trigger: int | None = None
-    #: schema drift handling (SURVEY §7.3.2): when a batch carries
-    #: payload columns outside the registered schema, evolve the
-    #: registry (ADD/widening need no restart — payload stays JSON in
-    #: the frame schema) or divert the batch to the DLQ when the drift
-    #: is incompatible. On `evolved` the pipeline rebinds its cached
-    #: validation/masking expressions and RE-MASKS the evolving batch
-    #: before fan-out, so an ADDed PII-named column is masked from the
-    #: batch that introduces it onward — no restart, no unmasked
-    #: window (tests/test_streaming.py::
-    #: test_pii_column_added_mid_stream_is_masked).
-    auto_evolve: bool = True
-    #: compute the per-key latest-wins flag ONCE in the batch
-    #: (__latest) and let every same-keyed upsert sink filter on it
-    #: instead of collapsing keys itself. MEASURED (interleaved, ~2k-row
-    #: triggers, 4 vCPU): on the Spark fan-out (r9) the extra window
-    #: serializes into the materialize job and costs more than the
-    #: per-sink shuffles it removes (median batch 0.80 vs 0.71 s); on
-    #: the Arrow fan-out it rides the one collect job and saves each
-    #: upsert sink an in-memory sort of a few ms — a tie (0.414 vs
-    #: 0.413 s, 25 pairs). Default OFF; it could only pay on the Spark
-    #: fan-out of large triggers with many upsert destinations, which
-    #: was never measured.
-    share_latest_flag: bool = False
-    #: compute the control counts (invalid/foreign/quality) via a
-    #: CollectMetrics (observe) node riding the materialize job (the
-    #: Arrow collect or the Spark cache fill) — one Spark job fewer per
-    #: trigger — instead of a separate aggregate job. Both paths
-    #: produce identical counts (same aggregate expressions over the
-    #: same rows). MEASURED trade-off: the separate job is submitted
-    #: BEFORE the materialize job and runs beside it, so the control
-    #: counts and the invalid-row DLQ write cost no latency; in observe
-    #: mode the counts exist only once the materialize job is done, so
-    #: the DLQ write starts after it, on the critical path. On the
-    #: Arrow fan-out at ~2k-row triggers (4 vCPU, 25 interleaved pairs)
-    #: the median batch went 0.41 → 0.56 s with observe on (r10, Spark
-    #: fan-out, control job after the materialize job: 0.594 → 0.618
-    #: s). Default OFF. Turn it on only when driver job SCHEDULING is
-    #: the constrained resource (hundreds of concurrent streams per
-    #: driver).
-    control_counts_via_observe: bool = False
-    #: AQE for the pipeline's micro-batch jobs. Default OFF: the
-    #: micro-batcher already sizes shuffle partitions to observed
-    #: batch volume (O19, _batch_partitions), so runtime re-planning
-    #: has nothing to decide at trigger scale and its per-stage
-    #: re-plan latency is pure overhead — interleaved A/B with
-    #: calibration-stable probes (r9) shows ~8% lower median batch
-    #: time with AQE off (0.59-0.70 s vs 0.63-0.93 s). Scope: start()
-    #: sets this on the PARENT session conf (the same latch the
-    #: shuffle-partition sizing uses) so the streaming query clones it
-    #: at start; until stop()/restore_confs() runs, batch/catalog
-    #: queries issued concurrently ON THIS SESSION also plan with AQE
-    #: per this flag — run concurrent analytics on their own session
-    #: (cheap: SparkSession.newSession shares the SparkContext) if
-    #: they need AQE while a pipeline is live. Set True for pipelines
-    #: with large, highly variable triggers where coalescing/
-    #: skew-splitting earn their keep.
-    adaptive_execution: bool = False
     #: optional per-table data-quality rules (operators/quality.py
     #: semantics): {rule_name: SQL boolean expression over the
     #: envelope/payload columns — use get_json_object('columns', ...)
@@ -267,18 +219,14 @@ class CDCPipeline:
 
     def _batch_partitions(self) -> int:
         """Partitions for THIS batch's jobs: the cap until a batch has
-        been observed, then ceil(prev_rows / rows_per_shuffle_partition)
+        been observed, then ceil(prev_rows / _ROWS_PER_SHUFFLE_PARTITION)
         clamped to [1, cap]. A steady small trigger (the common CDC
         case) runs 1-partition jobs — task scheduling dominates compute
         at that size — while a surge climbs back to the cap on the
         next trigger."""
         if self._last_batch_rows is None:
             return self.config.shuffle_partitions
-        import math
-
-        want = math.ceil(
-            self._last_batch_rows / max(1, self.config.rows_per_shuffle_partition)
-        )
+        want = math.ceil(self._last_batch_rows / _ROWS_PER_SHUFFLE_PARTITION)
         return max(1, min(self.config.shuffle_partitions, want))
 
     # -- transform stages (pure DataFrame → DataFrame, unit-testable) --
@@ -427,20 +375,6 @@ class CDCPipeline:
         """Stage 3 (O28): duplicate-delivery removal by event_id."""
         return batch.dropDuplicates(["event_id"])
 
-    def _flag_latest(self, batch: DataFrame) -> DataFrame:
-        """Add the shared latest-wins flag (``__latest``): true on the
-        newest row per replica key (same window as
-        sinks.latest_per_key — timestamp desc, event_id tiebreak).
-        Computed ONCE inside the cached batch so every upsert-
-        personality sink filters it map-side instead of each paying
-        its own window shuffle; append/aggregate personalities drop
-        the column (it is upsert-only metadata). The flag rides the
-        cache, never the sinks' storage or the DLQ."""
-        w = Window.partitionBy(
-            *[F.col(c) for c in self.config.key_cols]
-        ).orderBy(F.desc("timestamp_micros"), F.desc("event_id"))
-        return batch.withColumn("__latest", F.row_number().over(w) == 1)
-
     def mask(self, batch: DataFrame) -> DataFrame:
         """Stage 4 (O11-O14): mask classified payload fields inside the
         JSON columns string without fixing a payload schema — the
@@ -527,9 +461,11 @@ class CDCPipeline:
         registered schema, or a known column arriving under a new JSON
         class (e.g. a registered bigint as "thirty") — the ALTER path
         the supervisor classifies as compatible widening or
-        incompatible narrowing."""
+        incompatible narrowing. A flagged batch goes to the
+        supervisor (SURVEY §7.3.2), which evolves the registry or
+        diverts the batch to the DLQ; see process_batch."""
         schema = self.registry.latest(self.config.keyspace, self.config.table)
-        if not self.config.auto_evolve or schema is None:
+        if schema is None:
             return F.lit(False)
         from hybrid_cdc_demo_spark.schema.evolution import _json_class
 
@@ -590,34 +526,32 @@ class CDCPipeline:
             # materialize job below ON PURPOSE: they only need the
             # cached batch, and beside it they cost no latency, so the
             # aggregate is submitted before anything else is planned.
-            # Measured (4 vCPU, 2k-row triggers): with the Arrow
-            # fan-out, perfbench cdc_trickle's median batch fell from
-            # 0.774 to 0.396 s (10 interleaved pairs); the same fan-out
-            # with the DLQ write started after the collect instead
-            # (observe mode) took 0.56 s against 0.41 s. The control
-            # path still ends ~0.1 s after the ~20 ms Arrow writes: the
-            # invalid-row DLQ write is the critical path of a small
-            # trigger. (Also measured and rejected: letting the three
-            # Spark sink writes race to compute the cold `valid`
-            # instead of materializing it first — 0.68→0.74 s,
-            # block-level compute locking serializes the racers.)
-            if self.config.control_counts_via_observe:
-                from pyspark.sql import Observation
-
-                ctrl_obs = Observation(f"ctrl-{batch_id}")
-                observed = batch.observe(ctrl_obs, *self._control_aggs)
-                control_agg = None
-            else:
-                ctrl_obs = None
-                observed = batch
-                control_agg = pool.submit(
-                    lambda: batch.agg(*self._control_aggs).collect()[0]
-                )
+            # Measured (4 vCPU, 2k-row triggers, interleaved pairs):
+            # - with the Arrow fan-out, perfbench cdc_trickle's median
+            #   batch fell from 0.774 to 0.396 s (10 pairs);
+            # - taking the counts from an observe (CollectMetrics) node
+            #   on the materialize job saves that job but starts the
+            #   DLQ write after it: 0.41 → 0.56 s on the Arrow fan-out
+            #   (25 pairs), 0.594 → 0.618 s on the Spark one;
+            # - one shared latest-wins window in the batch instead of
+            #   one per upsert sink: 0.71 → 0.80 s on the Spark fan-out,
+            #   a tie on the Arrow one (0.413 vs 0.414 s, 25 pairs);
+            # - AQE on the micro-batch jobs: ~8% slower median batch
+            #   (0.63-0.93 vs 0.59-0.70 s), so start() turns it off;
+            # - letting the three Spark sink writes race to compute the
+            #   cold `valid` instead of materializing it first: 0.68 →
+            #   0.74 s, block-level compute locking serializes them.
+            # The control path still ends ~0.1 s after the ~20 ms Arrow
+            # writes: the invalid-row DLQ write is the critical path of
+            # a small trigger.
+            control_agg = pool.submit(
+                lambda: batch.agg(*self._control_aggs).collect()[0]
+            )
             # O6 scope filter runs FIRST: corrupt rows parse to null
             # keyspace/table and must still reach the DLQ, so the
             # invalid split keeps null-scope rows while foreign-table
             # rows (well-formed, different table) are skipped.
-            scoped = observed.filter(
+            scoped = batch.filter(
                 self._in_scope
                 | F.col("keyspace").isNull()
                 | F.col("table_name").isNull()
@@ -629,17 +563,14 @@ class CDCPipeline:
                 valid, quality_bad = gate(valid, self._quality_rules)
             else:
                 quality_bad = None
-            counts: dict = {}
 
             def control_task():
                 # invalid (O7 DLQ), foreign-table skips (O6: reference
                 # reader.py:186-188 skips silently, we count), and
-                # quality-gate failures. In observe mode the counts
-                # rode the materialize job's CollectMetrics, so a clean
-                # batch submits ZERO Spark jobs here; otherwise they
-                # come from the early aggregate job. The split frames
-                # are only scanned for the (rare) nonzero DLQ writes.
-                crow = counts if control_agg is None else control_agg.result()
+                # quality-gate failures, from the early aggregate job.
+                # The split frames are only scanned for the (rare)
+                # nonzero DLQ writes.
+                crow = control_agg.result()
                 inv = int(crow["invalid"] or 0)
                 if inv:
                     self._to_dlq(invalid, "validation", "contract_violation")
@@ -653,17 +584,13 @@ class CDCPipeline:
                     out.append(("quality_failed", nq))
                 return out
 
-            ctrl = None if control_agg is None else pool.submit(control_task)
-            valid = self.mask(self.dedup(valid))
-            if self.config.share_latest_flag:
-                # one window per batch instead of one per upsert sink
-                # (see PipelineConfig.share_latest_flag)
-                valid = self._flag_latest(valid)
+            ctrl = pool.submit(control_task)
             # Cached on both fan-outs: the first job below fills the
             # cache, so the sink writes (and DataFrame-only sinks on the
             # Arrow fan-out) read warm data, and a surge that the
             # limited collect detects is not computed a second time.
-            valid = valid.persist()
+            valid = self.mask(self.dedup(valid)).persist()
+            counts: dict = {}
             table = None
             if arrow_rows is not None:
                 # THE serial driver job of a small trigger: one Arrow
@@ -697,14 +624,6 @@ class CDCPipeline:
                     F.sum(self._drift_flag.cast("int")).alias("drift"),
                 ).collect()[0]
                 counts.update(n=row["n"], drift=row["drift"])
-            if ctrl_obs is not None:
-                # the observation is filled by the job above (its rows
-                # flowed through the CollectMetrics node below the
-                # blocking dedup aggregate, so a limited collect still
-                # counted every row); .get only blocks on the
-                # listener-bus delivery, not on a new job
-                counts.update(ctrl_obs.get)
-                ctrl = pool.submit(control_task)
             n_valid = int(counts["n"] or 0)
             path = "spark" if table is None else "arrow"
             stats = {"batch_id": batch_id, "valid": n_valid, "write_path": path}
@@ -741,9 +660,7 @@ class CDCPipeline:
                 if outcome["action"] == "incompatible":
                     # reference semantics: incompatible change diverts
                     # the table's events to the DLQ, sinks untouched
-                    # (__latest is in-flight upsert metadata, not part
-                    # of the DLQ'd envelope)
-                    self._to_dlq(valid.drop("__latest"), "schema", "schema_incompatible")
+                    self._to_dlq(valid, "schema", "schema_incompatible")
                     self.metrics.inc(
                         "cdc_errors_total",
                         n_valid,
@@ -769,19 +686,7 @@ class CDCPipeline:
                 # backlog for this destination until its write commits
                 # (reference set_backlog, metrics.py:84-86)
                 self.metrics.set_gauge("cdc_backlog_depth", n_valid, destination=name)
-                # the shared __latest flag is only valid for sinks
-                # keyed exactly like the pipeline — a foreign sink
-                # (user-attached, different key_cols) must not trust a
-                # flag computed on someone else's keys
-                own_keys = list(getattr(sink, "key_cols", ())) == list(
-                    self.config.key_cols
-                )
-                if table is not None and _writes_arrow(sink):
-                    data = table
-                    if not own_keys and "__latest" in table.column_names:
-                        data = table.drop_columns(["__latest"])
-                else:
-                    data = valid if own_keys else valid.drop("__latest")
+                data = table if table is not None and _writes_arrow(sink) else valid
                 try:
                     return name, with_retry(
                         lambda: sink.write_batch(data, batch_id),
@@ -809,7 +714,7 @@ class CDCPipeline:
                     log_sink_error(
                         name, type(exc).__name__, self.sink_errors[name]
                     )
-                    self._to_dlq(valid.drop("__latest"), name, type(exc).__name__)
+                    self._to_dlq(valid, name, type(exc).__name__)
                 else:
                     # committed: destination-labelled processed counter
                     # (reference increment_events_processed) and the
@@ -900,13 +805,13 @@ class CDCPipeline:
             "spark.sql.shuffle.partitions", str(self.config.shuffle_partitions)
         )
         conf.set("spark.sql.files.minPartitionNum", "1")
-        # micro-batch jobs plan with AQE per config (see
-        # PipelineConfig.adaptive_execution — the measured default is
-        # off); restored with the other confs on stop
-        conf.set(
-            "spark.sql.adaptive.enabled",
-            "true" if self.config.adaptive_execution else "false",
-        )
+        # micro-batch jobs plan without AQE (measured slower at trigger
+        # scale, see process_batch): the shuffle partitions are already
+        # sized to batch volume. Set on the parent session, which the
+        # query clones at start, so until stop()/restore_confs() other
+        # queries on THIS session plan without AQE too — run concurrent
+        # analytics on spark.newSession() if they need it.
+        conf.set("spark.sql.adaptive.enabled", "false")
         # O34 (VERDICT r4 #7): for byte-offset sources, feed the
         # source-lag backlog gauge (bytes on disk beyond the committed
         # offset) from the progress stream; the per-destination gauges

@@ -24,6 +24,14 @@ class RetryPolicy:
     max_delay_seconds: float = 30.0
     jitter_fraction: float = 0.25
 
+    def __post_init__(self):
+        # with_retry never calls the write at max_attempts=0: every
+        # valid row of every batch would go to the DLQ
+        if self.max_attempts < 1:
+            raise ValueError("retry.max_attempts must be >= 1")
+        if not 0 <= self.jitter_fraction <= 1:
+            raise ValueError("retry.jitter_fraction must be in [0, 1]")
+
 
 RETRYABLE_SUBSTRINGS = (
     "connection refused",

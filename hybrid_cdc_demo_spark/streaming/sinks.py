@@ -454,20 +454,10 @@ class UpsertSink:
         # replays into the SAME segment, never duplicating data
         seg = self.delta_path / f"seg-{batch_id:012d}"
         if not isinstance(batch, DataFrame):
-            if "__latest" in batch.column_names:
-                incoming = batch.filter(batch["__latest"]).drop_columns(["__latest"])
-            else:
-                incoming = latest_rows_arrow(batch, self.key_cols)
+            incoming = latest_rows_arrow(batch, self.key_cols)
             n, max_ts = _write_arrow_segment(self._augment_arrow(incoming), seg)
         else:
-            if "__latest" in batch.columns:
-                # the pipeline pre-computed the latest-wins flag inside
-                # the shared cached batch (one window shuffle for ALL
-                # upsert sinks instead of one per sink); this write is
-                # then a map-only filter over warm cache
-                incoming = batch.filter(F.col("__latest")).drop("__latest")
-            else:
-                incoming = latest_per_key(batch, self.key_cols)
+            incoming = latest_per_key(batch, self.key_cols)
             self._augment(incoming).write.mode("overwrite").parquet(str(seg))
             n, max_ts = _segment_stats(seg)
         self.ledger.commit(
@@ -617,13 +607,16 @@ class AppendSink:
         optimize_every: int | None = 64,
         keep_segments_for_streams: bool = False,
     ):
+        if delete_policy not in ("skip", "tombstone"):
+            raise ValueError(
+                f"delete_policy must be 'skip' or 'tombstone', not {delete_policy!r}"
+            )
         self.spark = spark
         self.path = Path(path)
         self.data_path = self.path / "log"
         self.data_path.mkdir(parents=True, exist_ok=True)
         self.ledger = BatchLedger(os.path.join(path, "ledger"))
         self.key_cols = key_cols
-        assert delete_policy in ("skip", "tombstone")
         self.delete_policy = delete_policy
         #: background small-file consolidation cadence: when the live
         #: log reaches this many entries, an optimize() runs off the
@@ -655,9 +648,7 @@ class AppendSink:
             return 0
         # per-batch segment dir + overwrite = idempotent under replay
         seg = self.data_path / f"seg-{batch_id:012d}"
-        # append personality stores EVERY row; the pipeline's shared
-        # latest-wins flag (see UpsertSink.write_batch) is upsert-only
-        # metadata and must not reach the log. Under the skip policy
+        # append personality stores EVERY row. Under the skip policy
         # DELETEs are dropped (reference parity, clickhouse.py:109-116 —
         # a documented divergence source); under tombstone they resolve
         # in the dedup view.
@@ -667,8 +658,6 @@ class AppendSink:
             from pyspark.sql.pandas.types import from_arrow_schema
 
             out = batch
-            if "__latest" in out.column_names:
-                out = out.drop_columns(["__latest"])
             if self.delete_policy == "skip":
                 out = out.filter(pc.not_equal(out["event_type"], "DELETE"))
             out = out.append_column(
@@ -677,7 +666,7 @@ class AppendSink:
             n, max_ts = _write_arrow_segment(out, seg)
             self._persist_schema(from_arrow_schema(out.schema))
         else:
-            out = batch.drop("__latest")
+            out = batch
             if self.delete_policy == "skip":
                 out = out.filter(F.col("event_type") != "DELETE")
             out = out.withColumn("_batch_id", F.lit(batch_id).cast("long"))
@@ -1156,10 +1145,6 @@ class AggregateSink:
     def write_batch(self, batch: DataFrame, batch_id: int) -> int:
         if self.ledger.is_committed(batch_id):
             return 0
-        # partial-aggregate personality folds EVERY row; the shared
-        # latest-wins flag is upsert-only metadata (see UpsertSink)
-        if "__latest" in batch.columns:
-            batch = batch.drop("__latest")
         seg = self.delta_path / f"seg-{batch_id:012d}"
         self._partial(batch).write.mode("overwrite").parquet(str(seg))
         n, max_ts = _segment_stats(seg)

@@ -6,6 +6,7 @@ import hashlib
 import hmac
 
 import pyspark.sql.functions as F
+import pytest
 
 from hybrid_cdc_demo_spark.functions.masking import (
     DEFAULT_SECRET_KEY,
@@ -26,6 +27,11 @@ def test_classification_precedence():
     assert classify_field("medical_record_number") is MaskingStrategy.PHI_TOKEN
     assert classify_field("first_name") is MaskingStrategy.NONE
     assert classify_field("PHONE") is MaskingStrategy.PII_HASH  # case-insensitive
+
+
+def test_empty_secret_key_rejected():
+    with pytest.raises(ValueError, match="secret_key"):
+        MaskingRules(secret_key="")
 
 
 def test_python_vectors():

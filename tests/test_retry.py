@@ -84,3 +84,16 @@ def test_with_retry_exhaustion():
         with_retry(
             always_down, RetryPolicy(max_attempts=3), sleep=lambda _: None
         )
+
+
+def test_policy_rejects_zero_attempts():
+    # with_retry would never call the write and DLQ every batch
+    with pytest.raises(ValueError, match="max_attempts"):
+        RetryPolicy(max_attempts=0)
+
+
+def test_policy_rejects_jitter_outside_unit_interval():
+    with pytest.raises(ValueError, match="jitter_fraction"):
+        RetryPolicy(jitter_fraction=1.5)
+    with pytest.raises(ValueError, match="jitter_fraction"):
+        RetryPolicy(jitter_fraction=-0.1)

@@ -145,62 +145,6 @@ class TestBackgroundPoolPinnedGuard:
         assert pool_sets == ["background", None], calls
 
 
-class TestControlCountModesAgree:
-    def test_observe_and_agg_modes_produce_identical_stats(
-        self, spark, tmp_path
-    ):
-        """control_counts_via_observe is a pure execution-strategy
-        flag: both modes must emit identical per-batch stats (valid /
-        invalid / foreign counts) and identical sink contents on a
-        corpus that exercises the invalid path (the seed-42 fixture
-        contains malformed rows)."""
-        from hybrid_cdc_demo_spark.schema.evolution import (
-            SchemaRegistry,
-            TableSchema,
-        )
-        from hybrid_cdc_demo_spark.sources.cdc import generate_change_events
-        from hybrid_cdc_demo_spark.streaming.pipeline import (
-            CDCPipeline,
-            PipelineConfig,
-        )
-
-        src = tmp_path / "commitlog"
-        generate_change_events(str(src), n_events=400, n_files=2, seed=42)
-
-        def run(mode: bool):
-            reg = SchemaRegistry()
-            reg.register(
-                TableSchema(
-                    "ecommerce",
-                    "users",
-                    {"user_id": "uuid", "email": "text", "age": "int"},
-                    ["user_id"],
-                )
-            )
-            cfg = PipelineConfig(
-                source_dir=str(src),
-                target_dir=str(tmp_path / f"warehouse-{mode}"),
-                control_counts_via_observe=mode,
-            )
-            p = CDCPipeline(spark, cfg, reg)
-            stats = []
-            orig = p.process_batch
-            p.process_batch = lambda df, bid: stats.append(orig(df, bid))
-            p.run_available()
-            keys = {
-                r["key_hash"]
-                for r in p.sinks["postgres"].read().select("key_hash").collect()
-            }
-            return stats, keys
-
-        stats_obs, keys_obs = run(True)
-        stats_agg, keys_agg = run(False)
-        assert stats_obs == stats_agg
-        assert keys_obs == keys_agg
-        # the fixture exercises the control plane: some invalid rows
-        assert any(s.get("invalid") for s in stats_obs)
-
-
 class TestP99Adjudication:
     def test_bench_artifact_has_per_replay_calibration_fields(self):
         """Contract pin: run_streaming_bench returns per-replay

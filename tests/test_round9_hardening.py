@@ -280,107 +280,6 @@ class TestSpillAuditFixes:
         assert got == -1
 
 
-class TestSharedLatestFlag:
-    def test_flag_matches_latest_per_key(self, spark):
-        from hybrid_cdc_demo_spark.schema.evolution import (
-            SchemaRegistry,
-            TableSchema,
-        )
-        from hybrid_cdc_demo_spark.streaming.pipeline import (
-            CDCPipeline,
-            PipelineConfig,
-        )
-        from hybrid_cdc_demo_spark.streaming.sinks import latest_per_key
-        import tempfile
-
-        reg = SchemaRegistry()
-        reg.register(
-            TableSchema("ecommerce", "users", {"user_id": "uuid"}, ["user_id"])
-        )
-        tmp = tempfile.mkdtemp(prefix="cdc-flag-")
-        p = CDCPipeline(
-            spark,
-            PipelineConfig(source_dir=tmp, target_dir=tmp + "/wh"),
-            reg,
-        )
-        df = spark.createDataFrame(
-            [
-                ("e1", "k1", 10),
-                ("e2", "k1", 20),  # latest for k1
-                ("e3", "k2", 5),
-                ("e4", "k2", 5),  # ts tie -> event_id desc wins
-            ],
-            "event_id string, key_hash string, timestamp_micros long",
-        )
-        flagged = p._flag_latest(df)
-        winners = {
-            r["event_id"]
-            for r in flagged.filter("__latest").collect()
-        }
-        expected = {
-            r["event_id"]
-            for r in latest_per_key(df, ["key_hash"]).collect()
-        }
-        assert winners == expected == {"e2", "e4"}
-
-    def test_foreign_key_sink_never_sees_the_flag(self, spark, tmp_path):
-        """A sink keyed differently from the pipeline must receive the
-        batch WITHOUT __latest (it would collapse by the wrong key
-        otherwise) and therefore computes its own latest_per_key."""
-        from hybrid_cdc_demo_spark.schema.evolution import (
-            SchemaRegistry,
-            TableSchema,
-        )
-        from hybrid_cdc_demo_spark.sources.cdc import generate_change_events
-        from hybrid_cdc_demo_spark.streaming.pipeline import (
-            CDCPipeline,
-            PipelineConfig,
-        )
-
-        reg = SchemaRegistry()
-        reg.register(
-            TableSchema(
-                "ecommerce",
-                "users",
-                {
-                    "user_id": "uuid", "email": "text", "phone": "text",
-                    "first_name": "text", "last_name": "text", "age": "int",
-                    "city": "text", "created_at": "timestamp",
-                },
-                ["user_id"],
-            )
-        )
-        src = str(tmp_path / "commitlog")
-        generate_change_events(src, n_events=200, n_files=2, seed=7)
-        cfg = PipelineConfig(
-            source_dir=src,
-            target_dir=str(tmp_path / "wh"),
-            share_latest_flag=True,  # opt-in (off by default — r9 A/B)
-        )
-        p = CDCPipeline(spark, cfg, reg)
-
-        seen = {}
-
-        class ForeignSink:
-            name = "foreign"
-            key_cols = ["event_id"]  # NOT the pipeline's key
-
-            def write_batch(self, batch, batch_id):
-                seen["cols"] = batch.columns
-                return batch.count()
-
-            def read(self):  # pragma: no cover - fan-out contract
-                raise NotImplementedError
-
-            def flush(self):
-                pass
-
-        p.sinks = {"foreign": ForeignSink()}
-        p.run_available()
-        assert "cols" in seen
-        assert "__latest" not in seen["cols"]
-
-
 class TestMMRGeneratedOracle:
     def test_mmr_oracle_unrolls_picks(self):
         from hybrid_cdc_demo_spark.plans import ORACLE_SQL
@@ -464,57 +363,3 @@ class TestBPEGeneratedOracles:
         # doc 2: low -> [low] (1 token), lower -> [low,e,r] (3 tokens)
         assert out.loc[2, "n_words"] == 2
         assert out.loc[2, "n_bpe_tokens"] == 4
-
-    def test_flag_off_by_default_and_on_when_opted_in(self, spark, tmp_path):
-        """Default config never adds __latest (the r9 A/B showed the
-        serialized window LOSES at SLO batch size); opting in delivers
-        it to same-keyed sinks."""
-        from hybrid_cdc_demo_spark.schema.evolution import (
-            SchemaRegistry,
-            TableSchema,
-        )
-        from hybrid_cdc_demo_spark.sources.cdc import generate_change_events
-        from hybrid_cdc_demo_spark.streaming.pipeline import (
-            CDCPipeline,
-            PipelineConfig,
-        )
-
-        reg = SchemaRegistry()
-        reg.register(
-            TableSchema(
-                "ecommerce", "users",
-                {"user_id": "uuid", "age": "int"}, ["user_id"],
-            )
-        )
-        src = str(tmp_path / "cl")
-        generate_change_events(src, n_events=100, n_files=1, seed=3)
-
-        seen: dict[str, list] = {}
-
-        def spy_sink(name):
-            class Spy:
-                key_cols = ["key_hash"]  # matches the pipeline default
-
-                def __init__(self):
-                    self.name = name
-
-                def write_batch(self, batch, batch_id):
-                    seen[name] = batch.columns
-                    return batch.count()
-
-                def flush(self):
-                    pass
-
-            return Spy()
-
-        for flag in (False, True):
-            cfg = PipelineConfig(
-                source_dir=src,
-                target_dir=str(tmp_path / f"wh-{flag}"),
-                share_latest_flag=flag,
-            )
-            p = CDCPipeline(spark, cfg, reg)
-            p.sinks = {f"spy{flag}": spy_sink(f"spy{flag}")}
-            p.run_available()
-        assert "__latest" not in seen["spyFalse"]
-        assert "__latest" in seen["spyTrue"]

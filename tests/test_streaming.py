@@ -459,17 +459,16 @@ def test_arrow_fanout_matches_spark_fanout(spark, tmp_path, monkeypatch):
     trigger takes the Spark path (no previous size) and the next two
     write their segments with pyarrow. Every sink — including one keyed
     differently from the pipeline and a DataFrame-only sink — reads
-    back hash-identical to an all-Spark run, with the shared latest
-    flag and with observe-mode control counts too."""
+    back hash-identical to an all-Spark run."""
     from hybrid_cdc_demo_spark.streaming.sinks import AggregateSink, UpsertSink
 
     src = tmp_path / "commitlog"
     generate_change_events(str(src), n_events=6000, n_files=3, seed=9)
 
-    def run(name, **cfg):
+    def run(name):
         (tmp_path / name).mkdir()
         (tmp_path / name / "commitlog").symlink_to(src)
-        p = _pipeline(spark, tmp_path / name, **cfg)
+        p = _pipeline(spark, tmp_path / name)
         wh = p.config.target_dir
         p.sinks["by_event"] = UpsertSink(spark, f"{wh}/by_event", ["event_id"])
         p.sinks["agg"] = AggregateSink(
@@ -490,14 +489,12 @@ def test_arrow_fanout_matches_spark_fanout(spark, tmp_path, monkeypatch):
         m.setattr(P, "_ARROW_FANOUT_MAX_ROWS", 0)  # the gate closed
         ref_stats, ref_reads, _ = run("ref")
     assert [s.pop("write_path") for s in ref_stats] == ["spark"] * 3
-    variants = [{}, {"share_latest_flag": True}, {"control_counts_via_observe": True}]
-    for i, cfg in enumerate(variants):
-        stats, reads, counters = run(f"arrow-{i}", **cfg)
-        assert [s.pop("write_path") for s in stats] == ["spark", "arrow", "arrow"], cfg
-        assert stats == ref_stats, cfg
-        assert counters['cdc_batches_total{path="arrow"}'] == 2
-        for name in ref_reads:
-            assert reads[name] == ref_reads[name], (cfg, name)
+    stats, reads, counters = run("arrow")
+    assert [s.pop("write_path") for s in stats] == ["spark", "arrow", "arrow"]
+    assert stats == ref_stats
+    assert counters['cdc_batches_total{path="arrow"}'] == 2
+    for name in ref_reads:
+        assert reads[name] == ref_reads[name], name
 
 
 def test_surge_past_the_cap_takes_spark_path_never_collected_whole(spark, tmp_path, monkeypatch):

@@ -30,6 +30,11 @@ def _write_all(spark, path, policy="tombstone"):
     return sink
 
 
+def test_unknown_delete_policy_rejected(spark, tmp_path):
+    with pytest.raises(ValueError, match="delete_policy"):
+        AppendSink(spark, str(tmp_path / "ch"), ["user_id"], delete_policy="drop")
+
+
 def test_read_asof_equals_prefix_state(spark, tmp_path):
     sink = _write_all(spark, str(tmp_path / "ch"))
     for upto in range(len(BATCHES)):

@@ -3,13 +3,13 @@
 The sandbox's session band swings timing up to 3x between sessions
 (PERF.md calibration history), so variant comparisons are only valid
 interleaved: A B A B ... in a single JVM, with a calibration probe per
-pair and a warmup ramp first. Variants are PipelineConfig overrides —
-e.g. compare the observe-based control counts against the separate
-control-aggregate job:
+pair and a warmup ramp first. Variants are PipelineConfig keys, built
+with ``config.load_config`` (so a misspelled key fails before Spark
+starts) — e.g. compare the shuffle-partition cap:
 
     python tools/ab_replay.py \
-        --a control_counts_via_observe=true \
-        --b control_counts_via_observe=false \
+        --a shuffle_partitions=4 \
+        --b shuffle_partitions=1 \
         --pairs 4
 
 Prints one JSON line with per-variant batch-time medians/p99s (pooled
@@ -28,18 +28,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _parse_conf(pairs: list[str]) -> dict:
-    out = {}
-    for item in pairs:
-        k, _, v = item.partition("=")
-        if v.lower() in ("true", "false"):
-            out[k] = v.lower() == "true"
-        else:
-            try:
-                out[k] = int(v)
-            except ValueError:
-                out[k] = v
-    return out
+def _variant(pairs: list[str]) -> dict:
+    """``k=v`` pairs → the PipelineConfig fields they set, typed by
+    load_config (the replay supplies the directories)."""
+    from hybrid_cdc_demo_spark.config import load_config
+
+    raw = dict(item.partition("=")[::2] for item in pairs)
+    cfg = load_config(overrides={"source_dir": "", "target_dir": "", **raw}, environ={})
+    return {k: getattr(cfg, k) for k in raw}
 
 
 def main() -> None:
@@ -50,7 +46,7 @@ def main() -> None:
     ap.add_argument("--n-events", type=int, default=50000)
     ap.add_argument("--n-files", type=int, default=25)
     args = ap.parse_args()
-    conf_a, conf_b = _parse_conf(args.a), _parse_conf(args.b)
+    conf_a, conf_b = _variant(args.a), _variant(args.b)
 
     from hybrid_cdc_demo_spark.session import get_spark
     import bench
