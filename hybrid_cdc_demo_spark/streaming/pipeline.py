@@ -11,12 +11,14 @@ Per micro-batch (foreachBatch — the reference's batch loop O19):
 5. fan out to the three sink personalities with per-sink error
    isolation + retry; failed sinks route events to the DLQ
    (O20/O29/O30). A small trigger (previous batch at most
-   ``_ARROW_FANOUT_MAX_ROWS`` valid rows) collects its
-   valid rows once as Arrow and the sinks write their segments with
-   pyarrow, no Spark job per sink; a larger one caches them and
-   writes each sink with a Spark job. Either way the control
-   aggregate and the invalid-row DLQ write start with the batch and
-   run beside it,
+   ``_ARROW_FANOUT_MAX_ROWS`` valid rows) is ONE Spark job: it
+   collects the batch once as Arrow, each row tagged with its class
+   (valid, foreign-table, invalid, quality-failed); the driver takes
+   the control counts from the tags, dedups the valid rows, writes
+   the invalid and quality rows to the DLQ itself, and the sinks
+   write their segments with pyarrow. A larger trigger caches the
+   valid rows and writes each sink with a Spark job, beside a control
+   aggregate and Spark DLQ writes that start with the batch,
 6. each sink commits its batch ledger row (O25-O27), giving
    checkpoint + ledger + idempotent-merge exactly-once.
 
@@ -37,6 +39,7 @@ from __future__ import annotations
 import inspect
 import math
 import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -57,7 +60,11 @@ from hybrid_cdc_demo_spark.schema.evolution import (
     SchemaRegistry,
 )
 from hybrid_cdc_demo_spark.sources.cdc import read_envelope_stream
-from hybrid_cdc_demo_spark.streaming.dlq import write_dlq
+from hybrid_cdc_demo_spark.streaming.dlq import (
+    arrow_writable,
+    write_dlq,
+    write_dlq_arrow,
+)
 from hybrid_cdc_demo_spark.streaming.retry import RetryPolicy, with_retry
 from hybrid_cdc_demo_spark.streaming.sinks import (
     AppendSink,
@@ -80,11 +87,41 @@ def _writes_arrow(sink) -> bool:
     return own is None or getattr(inspect.unwrap(own), "__self__", None) is sink
 
 
+def _first_per_event(table):
+    """Arrow twin of ``CDCPipeline.dedup``: the first row of every
+    ``event_id`` in batch order — the row ``dropDuplicates`` keeps when
+    one task reads the batch in order (a small trigger's one
+    partition)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pc.count_distinct(table["event_id"]).as_py() == table.num_rows:
+        return table
+    first = (
+        table.select(["event_id"])
+        .append_column("__i", pa.array(np.arange(table.num_rows)))
+        .group_by("event_id", use_threads=False)
+        .aggregate([("__i", "min")])
+    )
+    return table.take(np.sort(first["__i_min"].to_numpy()))
+
+
 #: Arrow fan-out cap (rows): while the previous batch had at most this
-#: many valid rows, a trigger collects ``valid`` once as Arrow (see
+#: many valid rows, a trigger collects the batch once as Arrow (see
 #: CDCPipeline._arrow_fanout_rows). It bounds the driver memory of that
 #: collect, not a measured crossover.
 _ARROW_FANOUT_MAX_ROWS = 50_000
+
+#: row classes of the Arrow collect's ``__cls`` tag (the predicates of
+#: CDCPipeline._build_control_aggs)
+_VALID, _FOREIGN, _INVALID, _QUALITY = range(4)
+
+#: control count -> the (DLQ destination, error type) of its rows
+_DLQ_ROUTES = {
+    "invalid": ("validation", "contract_violation"),
+    "quality_failed": ("quality", "quality_violation"),
+}
 
 #: target rows per shuffle partition of the adaptive sizing:
 #: partitions = clamp(ceil(prev_batch_rows / this), 1, cap). Local
@@ -203,6 +240,12 @@ class CDCPipeline:
         self._in_scope = (F.col("keyspace") == c.keyspace) & (
             F.col("table_name") == c.table
         )
+        # corrupt rows parse to null keyspace/table and must still
+        # reach the DLQ, so the scoped split keeps null-scope rows;
+        # everything outside it is a foreign-table row
+        self._scoped = (
+            self._in_scope | F.col("keyspace").isNull() | F.col("table_name").isNull()
+        )
         #: declarative DQ rules compiled once to unbound Columns (the
         #: streaming instance of operators/quality.py's gate)
         self._quality_rules = {
@@ -213,6 +256,9 @@ class CDCPipeline:
         self._last_batch_rows: int | None = None
         self._control_aggs = self._build_control_aggs()
         self._drift_flag = self._build_drift_flag()
+        #: (batch columns, projection) of the Arrow collect, built on
+        #: first use (see _collect_classified)
+        self._classified = None
         #: source-lag backlog listener (attached by start() for
         #: byte-offset sources, detached by restore_confs)
         self._backlog_listener = None
@@ -304,55 +350,40 @@ class CDCPipeline:
     def _build_control_aggs(self) -> list[F.Column]:
         """One conditional-sum aggregate computing EVERY control count
         the fan-out needs — invalid (DLQ), foreign-table skips (O6),
-        quality-gate failures — in a single job over the cached batch.
-        Before this the happy path ran one Spark count job PER control
-        stream every micro-batch (3 jobs that almost always return 0);
-        at per-second triggers the driver scheduling overhead of those
-        empty jobs was a measurable slice of per-batch latency. The
-        conditions mirror the filter predicates of the split frames
-        EXACTLY (scoped -> ~checks for invalid, well-formed & out-of-
-        scope for foreign, checks-pass & any-rule-violated for
-        quality), so the counts equal what .count() on those frames
-        returns — the frames themselves are still written to the DLQ,
-        but only when their count is nonzero.
+        quality-gate failures — in a single job over the cached batch
+        (one count job per control stream cost a job each, almost
+        always returning 0). The conditions mirror the filter
+        predicates of the split frames EXACTLY (scoped & ~checks for
+        invalid, out of scope for foreign, checks-pass &
+        any-rule-violated for quality), so the counts equal what
+        .count() on those frames returns — the frames themselves are
+        still written to the DLQ, but only when their count is nonzero.
 
-        Also derives ``self._valid_cond`` — the exact row predicate of
-        the replicated split (in-scope & contract-pass & quality-pass)
-        — so process_batch can fold the valid-count and drift probes
-        into this same aggregate: ONE driver job per trigger computes
-        every control-plane number (VERDICT r9 #2)."""
-        scoped_cond = (
-            self._in_scope
-            | F.col("keyspace").isNull()
-            | F.col("table_name").isNull()
-        )
+        Also derives ``self._cls``: the same predicates as one row class
+        (``_VALID``, ``_FOREIGN``, ``_INVALID``, ``_QUALITY``). The
+        Arrow fan-out tags every collected row with it and takes the
+        counts from the tags instead of running this aggregate."""
         checks_pass = F.coalesce(self._checks, F.lit(False))
         aggs = [
-            F.sum(F.when(scoped_cond & ~checks_pass, 1).otherwise(0))
+            F.sum(F.when(self._scoped & ~checks_pass, 1).otherwise(0))
             .cast("long")
             .alias("invalid"),
-            F.sum(
-                F.when(
-                    F.col("keyspace").isNotNull()
-                    & F.col("table_name").isNotNull()
-                    & ~self._in_scope,
-                    1,
-                ).otherwise(0)
-            )
+            F.sum(F.when(~self._scoped, 1).otherwise(0))
             .cast("long")
             .alias("foreign_skipped"),
         ]
-        self._valid_cond = scoped_cond & checks_pass
+        cls = F.when(~self._scoped, _FOREIGN).when(~checks_pass, _INVALID)
         if self._quality_rules:
             ok = F.lit(True)
             for pred in self._quality_rules.values():
                 ok = ok & F.coalesce(pred, F.lit(False))
             aggs.append(
-                F.sum(F.when(scoped_cond & checks_pass & ~ok, 1).otherwise(0))
+                F.sum(F.when(self._scoped & checks_pass & ~ok, 1).otherwise(0))
                 .cast("long")
                 .alias("quality_failed")
             )
-            self._valid_cond = self._valid_cond & ok
+            cls = cls.when(~ok, _QUALITY)
+        self._cls = cls.otherwise(_VALID)
         return aggs
 
     def refresh_plan_expressions(self) -> None:
@@ -365,6 +396,7 @@ class CDCPipeline:
         self._masked_payload = self._build_masked_payload()
         self._control_aggs = self._build_control_aggs()
         self._drift_flag = self._build_drift_flag()
+        self._classified = None
 
     def split_valid(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         """Stage 1+2: corrupt / contract-violating rows out (O7/O8)."""
@@ -402,19 +434,23 @@ class CDCPipeline:
 
     # -- micro-batch processor ----------------------------------------
 
-    def _arrow_fanout_rows(self, session: SparkSession) -> int | None:
+    def _arrow_fanout_rows(self, batch: DataFrame) -> int | None:
         """Row cap of the Arrow fan-out for THIS trigger, or None for
         the Spark fan-out.
 
         A trigger whose previous batch had at most
-        ``_ARROW_FANOUT_MAX_ROWS`` valid rows collects ``valid`` once
-        as Arrow (at most cap + 1 rows: a surge past the cap is
-        detected by the collect itself and goes to the Spark fan-out
-        without reaching the driver whole), and every Arrow-capable
-        sink writes its segment with pyarrow. The first trigger of a
-        pipeline has no previous size and takes the Spark fan-out. The
-        Arrow side also needs a session time zone Arrow can locate (the
-        hypertable's chunk date is derived in it).
+        ``_ARROW_FANOUT_MAX_ROWS`` valid rows collects the batch once
+        as Arrow. The cap counts every collected row — valid,
+        foreign-table, invalid and quality-failed alike: the collect
+        stops at cap + 1 rows, so a surge past the cap is detected by
+        the collect itself and goes to the Spark fan-out without
+        reaching the driver whole. Every Arrow-capable sink writes its
+        segment with pyarrow. The first trigger of a pipeline has no
+        previous size and takes the Spark fan-out. The Arrow side also
+        needs a session time zone Arrow can locate (the hypertable's
+        chunk date and the DLQ's timestamps are derived in it) and
+        batch columns the driver-side DLQ writer prints as Spark does
+        (``dlq.arrow_writable``).
 
         No crossover was found, measured with
         ``tools/arrow_crossover.py`` (4 vCPU, ``local[4]``, 2 GB driver
@@ -440,18 +476,21 @@ class CDCPipeline:
         that was not measured.
 
         A surge right after a small trigger pays for the aborted
-        collect (``tools/arrow_crossover.py --surge``, same host, the
-        surge's ``process_batch`` with the gate open vs closed): 4.19
-        vs 3.31 s at 60,000 rows, 5.89 vs 5.16 s at 100,000, 12.5 vs
-        11.7 s at 200,000 — the cap + 1 rows it converts and serves.
-        ``valid`` is cached before the collect, so the Spark fan-out
-        does not recompute the batch; without that cache the surge
-        took 5.81 vs 3.91 s at 60,000 rows."""
+        collect (``tools/arrow_crossover.py --surge``, same host, 6
+        interleaved pairs, the surge's ``process_batch`` with the gate
+        open vs closed): 6.57 vs 4.21 s at 60,000 rows, 7.69 vs 5.41 s
+        at 100,000. The collect classifies and masks cap + 1 rows,
+        converts and serves them, and only then does the control job
+        start; the Spark fan-out reads the batch from the cache the
+        collect filled, but recomputes the masked rows."""
         cap = _ARROW_FANOUT_MAX_ROWS
         if (
             self._last_batch_rows is None
             or self._last_batch_rows > cap
-            or not arrow_timezone_ok(session.conf.get("spark.sql.session.timeZone"))
+            or not arrow_timezone_ok(
+                batch.sparkSession.conf.get("spark.sql.session.timeZone")
+            )
+            or not arrow_writable(batch.schema)
         ):
             return None
         return cap
@@ -488,16 +527,12 @@ class CDCPipeline:
             df, self.config.dlq_path, destination, error_type, metrics=self.metrics
         )
 
-    def _record_control(self, stats: dict, rows: list) -> None:
+    def _record_control(self, stats: dict, counts: dict) -> None:
         """Control-stream counts into ``stats`` and the error counters."""
-        errors = {
-            "invalid": ("validation", "contract_violation"),
-            "quality_failed": ("quality", "quality_violation"),
-        }
-        for name, n in rows:
+        for name, n in counts.items():
             stats[name] = n
-            if n and name in errors:
-                destination, error_type = errors[name]
+            if n and name in _DLQ_ROUTES:
+                destination, error_type = _DLQ_ROUTES[name]
                 self.metrics.inc(
                     "cdc_errors_total",
                     n,
@@ -505,134 +540,190 @@ class CDCPipeline:
                     error_type=error_type,
                 )
 
+    def _collect_classified(self, batch: DataFrame, cap: int):
+        """THE one Spark job of an Arrow-fan-out trigger: at most
+        ``cap + 1`` rows of ``batch`` as a ``pyarrow.Table``, each row
+        tagged ``__cls`` (see _build_control_aggs). Valid rows also
+        carry ``key_hash``, ``columns_masked`` and the drift flag
+        ``__drift``; foreign-table rows carry only their class, every
+        other column null. The projection is built once per batch
+        schema: building its ~20 Columns took 57 ms of Py4J calls
+        (4 vCPU), a sixth of a 2,000-row trigger."""
+        columns = tuple(batch.columns)
+        if self._classified is None or self._classified[0] != columns:
+            cls = F.col("__cls")
+            valid = cls == _VALID
+            self._classified = columns, [
+                *[F.when(cls != _FOREIGN, F.col(c)).alias(c) for c in columns],
+                F.when(valid, self._key_hash).alias("key_hash"),
+                F.when(valid, self._masked_payload).alias("columns_masked"),
+                F.when(valid, self._drift_flag).alias("__drift"),
+                cls,
+            ]
+        return (
+            batch.withColumn("__cls", self._cls)
+            .select(*self._classified[1])
+            .limit(cap + 1)
+            .toArrow()
+        )
+
+    def _split_classified(self, table) -> tuple:
+        """A classified collect split on the driver: the valid rows,
+        deduped, with their drift flag and tag dropped; whether any of
+        them drifted; the control counts; and the rows each nonzero DLQ
+        count sends to the DLQ (the batch's own columns)."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        cls = table["__cls"].to_numpy()
+        n = np.bincount(cls, minlength=4)
+        counts = {"invalid": int(n[_INVALID]), "foreign_skipped": int(n[_FOREIGN])}
+        if self._quality_rules:
+            counts["quality_failed"] = int(n[_QUALITY])
+        batch_cols = table.column_names[:-4]
+        codes = {"invalid": _INVALID, "quality_failed": _QUALITY}
+        dlq_rows = {
+            name: table.filter(cls == codes[name]).select(batch_cols)
+            for name in _DLQ_ROUTES
+            if counts.get(name)
+        }
+        valid = _first_per_event(table.filter(cls == _VALID))
+        drift = bool(pc.any(valid["__drift"]).as_py())
+        return valid.drop_columns(["__drift", "__cls"]), drift, counts, dlq_rows
+
     def process_batch(self, batch: DataFrame, batch_id: int) -> dict:
         # under foreachBatch `batch` is bound to the streaming query's
         # cloned session (confs latched at query start — start() sizes
         # them); for direct calls this is the caller's session
         session = batch.sparkSession
+        # the zone the Arrow gate checks is the one HypertableSink
+        # derives `_chunk` in (the sinks' own session may differ) and
+        # the driver-side DLQ writer prints timestamps in
+        tz = session.conf.get("spark.sql.session.timeZone")
         parts = self._batch_partitions()
-        arrow_rows = self._arrow_fanout_rows(session)
         prev_parts = session.conf.get("spark.sql.shuffle.partitions")
         session.conf.set("spark.sql.shuffle.partitions", str(parts))
         # narrow (no shuffle) so every downstream job over the cached
         # batch runs batch-sized task counts, not source-split counts
         batch = batch.coalesce(parts).persist()
-        valid = None
-        # control aggregate, control task and one task per sink; shut
-        # down (waiting) before the caches are released
+        arrow_rows = self._arrow_fanout_rows(batch)
+        split: dict = {}
+        split_lock = threading.Lock()
+
+        def frames() -> dict:
+            """The split frames — ``valid`` (deduped, masked, cached),
+            ``invalid`` and ``quality_failed`` — planned on first use.
+            The Spark fan-out uses them at once; an Arrow-fan-out
+            trigger only for schema drift, DataFrame-only sinks, the
+            DLQ of a failed sink or an incompatible schema."""
+            with split_lock:
+                if not split:
+                    valid, invalid = self.split_valid(batch.filter(self._scoped))
+                    quality_bad = None
+                    if self._quality_rules:
+                        from hybrid_cdc_demo_spark.operators.quality import gate
+
+                        valid, quality_bad = gate(valid, self._quality_rules)
+                    # cached: the first job over it fills the cache, so
+                    # the sink writes read warm data
+                    split.update(
+                        valid=self.mask(self.dedup(valid)).persist(),
+                        invalid=invalid,
+                        quality_failed=quality_bad,
+                    )
+                return split
+
+        # control task and one task per sink (plus the control aggregate
+        # on the Spark fan-out); shut down (waiting) before the caches
+        # are released
         pool = ThreadPoolExecutor(max_workers=2 + len(self.sinks))
         try:
-            # The control aggregate and its DLQ writes race the
-            # materialize job below ON PURPOSE: they only need the
-            # cached batch, and beside it they cost no latency, so the
-            # aggregate is submitted before anything else is planned.
-            # Measured (4 vCPU, 2k-row triggers, interleaved pairs):
-            # - with the Arrow fan-out, perfbench cdc_trickle's median
-            #   batch fell from 0.774 to 0.396 s (10 pairs);
-            # - taking the counts from an observe (CollectMetrics) node
-            #   on the materialize job saves that job but starts the
-            #   DLQ write after it: 0.41 → 0.56 s on the Arrow fan-out
-            #   (25 pairs), 0.594 → 0.618 s on the Spark one;
-            # - one shared latest-wins window in the batch instead of
-            #   one per upsert sink: 0.71 → 0.80 s on the Spark fan-out,
-            #   a tie on the Arrow one (0.413 vs 0.414 s, 25 pairs);
-            # - AQE on the micro-batch jobs: ~8% slower median batch
-            #   (0.63-0.93 vs 0.59-0.70 s), so start() turns it off;
-            # - letting the three Spark sink writes race to compute the
-            #   cold `valid` instead of materializing it first: 0.68 →
-            #   0.74 s, block-level compute locking serializes them.
-            # The control path still ends ~0.1 s after the ~20 ms Arrow
-            # writes: the invalid-row DLQ write is the critical path of
-            # a small trigger.
-            control_agg = pool.submit(
-                lambda: batch.agg(*self._control_aggs).collect()[0]
-            )
-            # O6 scope filter runs FIRST: corrupt rows parse to null
-            # keyspace/table and must still reach the DLQ, so the
-            # invalid split keeps null-scope rows while foreign-table
-            # rows (well-formed, different table) are skipped.
-            scoped = batch.filter(
-                self._in_scope
-                | F.col("keyspace").isNull()
-                | F.col("table_name").isNull()
-            )
-            valid, invalid = self.split_valid(scoped)
-            if self._quality_rules:
-                from hybrid_cdc_demo_spark.operators.quality import gate
-
-                valid, quality_bad = gate(valid, self._quality_rules)
-            else:
-                quality_bad = None
-
-            def control_task():
-                # invalid (O7 DLQ), foreign-table skips (O6: reference
-                # reader.py:186-188 skips silently, we count), and
-                # quality-gate failures, from the early aggregate job.
-                # The split frames are only scanned for the (rare)
-                # nonzero DLQ writes.
-                crow = control_agg.result()
-                inv = int(crow["invalid"] or 0)
-                if inv:
-                    self._to_dlq(invalid, "validation", "contract_violation")
-                out = [("invalid", inv), ("foreign_skipped", int(crow["foreign_skipped"] or 0))]
-                if quality_bad is not None:
-                    nq = int(crow["quality_failed"] or 0)
-                    if nq:
-                        # declarative DQ gate failures: quarantined,
-                        # never replicated, never crash the pipeline
-                        self._to_dlq(quality_bad, "quality", "quality_violation")
-                    out.append(("quality_failed", nq))
-                return out
-
-            ctrl = pool.submit(control_task)
-            # Cached on both fan-outs: the first job below fills the
-            # cache, so the sink writes (and DataFrame-only sinks on the
-            # Arrow fan-out) read warm data, and a surge that the
-            # limited collect detects is not computed a second time.
-            valid = self.mask(self.dedup(valid)).persist()
-            counts: dict = {}
             table = None
             if arrow_rows is not None:
-                # THE serial driver job of a small trigger: one Arrow
-                # collect of the transformed batch gives the sinks their
-                # rows, the O19 stat and the schema-drift probe at once
-                import pyarrow.compute as pc
-
-                table = (
-                    valid.withColumn("__drift", self._drift_flag)
-                    .limit(arrow_rows + 1)
-                    .toArrow()
-                )
-                # the zone the gate checked is the one HypertableSink
-                # derives `_chunk` in (the sinks' own session may differ)
-                tz = session.conf.get("spark.sql.session.timeZone")
+                table = self._collect_classified(batch, arrow_rows)
                 if table.num_rows > arrow_rows:
                     table = None  # a surge: Spark fan-out
-                else:
-                    counts.update(
-                        n=table.num_rows, drift=pc.any(table["__drift"]).as_py()
-                    )
-                    table = stamp_time_zone(table.drop_columns(["__drift"]), tz)
-            if table is None:
+            if table is not None:
+                # Small trigger, one Spark job: the counts come from the
+                # tags, the driver dedups the valid rows and writes the
+                # DLQ rows itself, beside the sinks. Against a control
+                # aggregate and a Spark DLQ write beside the collect
+                # (3 jobs per batch), perfbench cdc_trickle's median
+                # batch fell from 0.379 to 0.228 s (4 vCPU, 2k-row
+                # triggers, 10 interleaved pairs).
+                table, drift, counts, dlq_rows = self._split_classified(table)
+                n_valid = table.num_rows
+                table = stamp_time_zone(table, tz)
+
+                def control_task():
+                    for name, rows in dlq_rows.items():
+                        write_dlq_arrow(
+                            rows, self.config.dlq_path, *_DLQ_ROUTES[name], tz,
+                            metrics=self.metrics,
+                        )
+                    return counts
+            else:
+                # The control aggregate and its DLQ writes race the
+                # materialize job below ON PURPOSE: they only need the
+                # cached batch, and beside it they cost no latency, so
+                # the aggregate is submitted before anything else is
+                # planned. Measured (4 vCPU, 2k-row triggers,
+                # interleaved pairs):
+                # - with the Arrow fan-out, perfbench cdc_trickle's
+                #   median batch fell from 0.774 to 0.396 s (10 pairs);
+                # - taking the counts from an observe (CollectMetrics)
+                #   node on the materialize job saves that job but
+                #   starts the DLQ write after it: 0.41 → 0.56 s on the
+                #   Arrow fan-out (25 pairs), 0.594 → 0.618 s on the
+                #   Spark one;
+                # - one shared latest-wins window in the batch instead
+                #   of one per upsert sink: 0.71 → 0.80 s on the Spark
+                #   fan-out, a tie on the Arrow one (0.413 vs 0.414 s,
+                #   25 pairs);
+                # - AQE on the micro-batch jobs: ~8% slower median batch
+                #   (0.63-0.93 vs 0.59-0.70 s), so start() turns it off;
+                # - letting the three Spark sink writes race to compute
+                #   the cold `valid` instead of materializing it first:
+                #   0.68 → 0.74 s, block-level compute locking
+                #   serializes them.
+                control_agg = pool.submit(
+                    lambda: batch.agg(*self._control_aggs).collect()[0]
+                )
+                frames()
+
+                def control_task():
+                    # invalid (O7 DLQ), foreign-table skips (O6:
+                    # reference reader.py:186-188 skips silently, we
+                    # count) and quality-gate failures (quarantined,
+                    # never replicated); the split frames are only
+                    # scanned for the (rare) nonzero DLQ writes
+                    counts = {
+                        k: int(v or 0) for k, v in control_agg.result().asDict().items()
+                    }
+                    for name, route in _DLQ_ROUTES.items():
+                        if counts.get(name):
+                            self._to_dlq(split[name], *route)
+                    return counts
+
                 # THE serial driver job of the Spark fan-out: materialize
-                # the transformed batch into cache (already filled after
-                # a surge) so the parallel sink writes read warm data
-                # instead of racing cold-cache partitions; the same job
-                # computes the O19 stat and the schema-drift probe
-                row = valid.agg(
+                # the transformed batch into cache so the parallel sink
+                # writes read warm data instead of racing cold-cache
+                # partitions; the same job computes the O19 stat and
+                # the schema-drift probe
+                row = split["valid"].agg(
                     F.count(F.lit(1)).alias("n"),
                     F.sum(self._drift_flag.cast("int")).alias("drift"),
                 ).collect()[0]
-                counts.update(n=row["n"], drift=row["drift"])
-            n_valid = int(counts["n"] or 0)
+                n_valid, drift = int(row["n"] or 0), row["drift"]
+            ctrl = pool.submit(control_task)
             path = "spark" if table is None else "arrow"
             stats = {"batch_id": batch_id, "valid": n_valid, "write_path": path}
             self.metrics.inc("cdc_batches_total", path=path)
             self._last_batch_rows = n_valid
 
-            if counts["drift"]:
+            if drift:
                 outcome = self.evolution.observe_batch(
-                    valid, self.config.keyspace, self.config.table
+                    frames()["valid"], self.config.keyspace, self.config.table
                 )
                 stats["schema"] = outcome["action"]
                 log_schema_change(
@@ -652,15 +743,16 @@ class CDCPipeline:
                     # closed here because the expressions are unbound
                     # Columns, one driver-side rebuild away).
                     self.refresh_plan_expressions()
+                    valid = split["valid"]
                     remasked = self.mask(valid.drop("key_hash", "columns_masked")).persist()
                     if table is not None:
                         table = stamp_time_zone(remasked.toArrow(), tz)
                     valid.unpersist()
-                    valid = remasked
+                    split["valid"] = remasked
                 if outcome["action"] == "incompatible":
                     # reference semantics: incompatible change diverts
                     # the table's events to the DLQ, sinks untouched
-                    self._to_dlq(valid, "schema", "schema_incompatible")
+                    self._to_dlq(split["valid"], "schema", "schema_incompatible")
                     self.metrics.inc(
                         "cdc_errors_total",
                         n_valid,
@@ -686,8 +778,12 @@ class CDCPipeline:
                 # backlog for this destination until its write commits
                 # (reference set_backlog, metrics.py:84-86)
                 self.metrics.set_gauge("cdc_backlog_depth", n_valid, destination=name)
-                data = table if table is not None and _writes_arrow(sink) else valid
                 try:
+                    data = (
+                        table
+                        if table is not None and _writes_arrow(sink)
+                        else frames()["valid"]
+                    )
                     return name, with_retry(
                         lambda: sink.write_batch(data, batch_id),
                         self.config.retry,
@@ -714,7 +810,7 @@ class CDCPipeline:
                     log_sink_error(
                         name, type(exc).__name__, self.sink_errors[name]
                     )
-                    self._to_dlq(valid, name, type(exc).__name__)
+                    self._to_dlq(frames()["valid"], name, type(exc).__name__)
                 else:
                     # committed: destination-labelled processed counter
                     # (reference increment_events_processed) and the
@@ -735,8 +831,8 @@ class CDCPipeline:
             # then release BOTH caches — a per-second trigger that only
             # persists would accumulate stale blocks for the whole run
             pool.shutdown(wait=True)
-            if valid is not None:
-                valid.unpersist()
+            if split:
+                split["valid"].unpersist()
             batch.unpersist()
             session.conf.set("spark.sql.shuffle.partitions", prev_parts)
 

@@ -316,12 +316,13 @@ def stamp_time_zone(table, time_zone: str):
     )
 
 
-def _write_hadoop_crc(part: Path) -> None:
+def _write_hadoop_crc(part: Path, name: str | None = None) -> None:
     """Write the ``.<name>.crc`` sidecar Hadoop's local file system
     keeps next to every file it writes (``crc\\0``, bytes per checksum,
     then one big-endian CRC32 per 512-byte chunk). Spark verifies it on
     every read, so a pyarrow-written file gets the same corruption
-    check as a Spark-written one."""
+    check as a Spark-written one. ``name`` is the name ``part`` will be
+    renamed to, when it is written under a temporary one."""
     import struct
     import zlib
 
@@ -330,7 +331,7 @@ def _write_hadoop_crc(part: Path) -> None:
         struct.pack(">I", zlib.crc32(data[i:i + 512]))
         for i in range(0, len(data), 512)
     )
-    (part.parent / f".{part.name}.crc").write_bytes(
+    (part.parent / f".{name or part.name}.crc").write_bytes(
         b"crc\0" + struct.pack(">i", 512) + sums
     )
 

@@ -455,20 +455,32 @@ def _digest(df):
 
 
 def test_arrow_fanout_matches_spark_fanout(spark, tmp_path, monkeypatch):
-    """Three 2,000-event triggers: with the Arrow fan-out the first
-    trigger takes the Spark path (no previous size) and the next two
-    write their segments with pyarrow. Every sink — including one keyed
-    differently from the pipeline and a DataFrame-only sink — reads
-    back hash-identical to an all-Spark run."""
+    """Three 2,000-event triggers and a foreign-table one, under a
+    quality rule: with the Arrow fan-out the first trigger takes the
+    Spark path (no previous size) and the rest write their segments
+    with pyarrow and their DLQ rows from the driver. The control counts
+    (invalid, foreign_skipped, quality_failed), the DLQ (but its
+    failed_at) and every sink — including one keyed differently from
+    the pipeline and a DataFrame-only sink — read back hash-identical
+    to an all-Spark run."""
+    from hybrid_cdc_demo_spark.streaming.dlq import read_dlq
     from hybrid_cdc_demo_spark.streaming.sinks import AggregateSink, UpsertSink
 
     src = tmp_path / "commitlog"
     generate_change_events(str(src), n_events=6000, n_files=3, seed=9)
+    generate_change_events(
+        str(src), n_events=300, n_files=1, seed=10, keyspace="analytics",
+        file_prefix="foreign",
+    )
+    order = ["commitlog-0000", "commitlog-0001", "foreign-0000", "commitlog-0002"]
+    for i, name in enumerate(order):
+        os.utime(src / f"{name}.json", (1_700_000_000 + i, 1_700_000_000 + i))
+    rules = {"adult": "event_type = 'DELETE' OR CAST(get_json_object(columns, '$.age') AS INT) >= 21"}
 
     def run(name):
         (tmp_path / name).mkdir()
         (tmp_path / name / "commitlog").symlink_to(src)
-        p = _pipeline(spark, tmp_path / name)
+        p = _pipeline(spark, tmp_path / name, quality_rules=rules)
         wh = p.config.target_dir
         p.sinks["by_event"] = UpsertSink(spark, f"{wh}/by_event", ["event_id"])
         p.sinks["agg"] = AggregateSink(
@@ -483,16 +495,19 @@ def test_arrow_fanout_matches_spark_fanout(spark, tmp_path, monkeypatch):
         reads = {n: _digest(s.read()) for n, s in p.sinks.items()}
         reads["asof"] = _digest(ch.read_asof(1))
         reads["changes"] = _digest(ch.changes_between(0, 2))
+        reads["dlq"] = _digest(read_dlq(spark, p.config.dlq_path).drop("failed_at"))
         return stats, reads, p.metrics.snapshot()["counters"]
 
     with monkeypatch.context() as m:
         m.setattr(P, "_ARROW_FANOUT_MAX_ROWS", 0)  # the gate closed
         ref_stats, ref_reads, _ = run("ref")
-    assert [s.pop("write_path") for s in ref_stats] == ["spark"] * 3
+    assert [s.pop("write_path") for s in ref_stats] == ["spark"] * 4
     stats, reads, counters = run("arrow")
-    assert [s.pop("write_path") for s in stats] == ["spark", "arrow", "arrow"]
+    assert [s.pop("write_path") for s in stats] == ["spark", "arrow", "arrow", "arrow"]
+    for count in ("invalid", "foreign_skipped", "quality_failed"):
+        assert sum(s[count] for s in stats[1:]) > 0, count
     assert stats == ref_stats
-    assert counters['cdc_batches_total{path="arrow"}'] == 2
+    assert counters['cdc_batches_total{path="arrow"}'] == 3
     for name in ref_reads:
         assert reads[name] == ref_reads[name], name
 
@@ -532,8 +547,11 @@ def test_surge_past_the_cap_takes_spark_path_never_collected_whole(spark, tmp_pa
     assert [s["write_path"] for s in stats] == ["spark", "spark", "spark", "arrow"]
     assert stats[1]["valid"] > cap
     # the surge's collect stopped at cap + 1; only the last trigger's
-    # whole batch reached the driver
-    assert collected == [cap + 1, stats[3]["valid"]]
+    # whole batch (valid, duplicate and invalid rows alike) reached the
+    # driver
+    last = read_envelope_batch(spark, str(src / "3-wave-0000.json")).count()
+    assert last > stats[3]["valid"]
+    assert collected == [cap + 1, last]
     expected = _expected_latest(spark, str(src))
     exp_keys = {
         r["kh"]
@@ -547,8 +565,10 @@ def test_surge_past_the_cap_takes_spark_path_never_collected_whole(spark, tmp_pa
 def test_dlq_write_failure_is_logged_and_counted(spark, tmp_path):
     """A DLQ that cannot be written never crashes the pipeline, but the
     loss is not silent: the batch commits to every sink and
-    cdc_dlq_write_failures_total{destination} ticks."""
-    generate_change_events(str(tmp_path / "commitlog"), n_events=600, n_files=1, seed=42)
+    cdc_dlq_write_failures_total{destination} ticks — on the Spark
+    writer (first trigger) and on the driver-side one (second trigger,
+    Arrow fan-out) alike."""
+    generate_change_events(str(tmp_path / "commitlog"), n_events=600, n_files=2, seed=42)
     p = _pipeline(spark, tmp_path)
     os.makedirs(p.config.target_dir, exist_ok=True)
     with open(p.config.dlq_path, "w") as fh:  # a file where the DLQ dir goes
@@ -559,6 +579,9 @@ def test_dlq_write_failure_is_logged_and_counted(spark, tmp_path):
         def emit(self, record):
             records.append(record)
 
+    stats = []
+    orig = p.process_batch
+    p.process_batch = lambda df, bid: stats.append(orig(df, bid))
     keep = Keep()
     get_logger().addHandler(keep)
     try:
@@ -567,13 +590,45 @@ def test_dlq_write_failure_is_logged_and_counted(spark, tmp_path):
         get_logger().removeHandler(keep)
 
     assert [r.fields["destination"] for r in records if r.getMessage() == "dlq_write_failed"] == [
-        "validation"
+        "validation", "validation"
     ]
+    assert [s["write_path"] for s in stats] == ["spark", "arrow"]
     for sink in p.sinks.values():
-        assert len(sink.ledger.committed_batches()) == 1
+        assert len(sink.ledger.committed_batches()) == 2
     counters = p.metrics.snapshot()["counters"]
     assert counters['cdc_errors_total{destination="validation",error_type="contract_violation"}'] > 0
-    assert counters['cdc_dlq_write_failures_total{destination="validation"}'] == 1
+    assert counters['cdc_dlq_write_failures_total{destination="validation"}'] == 2
+
+
+def test_arrow_trigger_plans_the_split_frames_once_for_many_dataframe_sinks(spark, tmp_path):
+    """On an Arrow-fan-out trigger the split frames are planned on first
+    use, by whichever sink thread asks first: four DataFrame-only sinks
+    asking at once (thread switches forced often) get one plan, and
+    every sink gets the batch."""
+    import sys
+
+    from hybrid_cdc_demo_spark.streaming.sinks import AggregateSink
+
+    paths = generate_change_events(str(tmp_path / "commitlog"), n_events=800, n_files=2, seed=4)
+    p = _pipeline(spark, tmp_path)
+    for i in range(4):
+        p.sinks[f"agg{i}"] = AggregateSink(
+            spark, f"{p.config.target_dir}/agg{i}", ["key_hash"], {"events": ("event_id", "count")}
+        )
+    plans = []
+    dedup = p.dedup
+    p.dedup = lambda df: plans.append(1) or dedup(df)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        stats = [p.process_batch(read_envelope_batch(spark, path), bid) for bid, path in enumerate(paths)]
+    finally:
+        sys.setswitchinterval(interval)
+    assert [s["write_path"] for s in stats] == ["spark", "arrow"]
+    assert len(plans) == 2  # one per trigger
+    assert p.sink_errors == {}
+    for i in range(4):
+        assert len(p.sinks[f"agg{i}"]._segments()) == 2
 
 
 def test_arrow_chunk_dates_follow_the_batch_session_zone(spark, tmp_path):

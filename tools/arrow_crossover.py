@@ -10,10 +10,10 @@ shuffle partitions as if the previous batch had the same size.
 
 Surge mode (``--surge``): each trigger size is a surge arriving right
 after a 2,000-row batch, so the Arrow gate is open. One pipeline keeps
-the shipped cap: its collect stops at cap + 1 rows and the surge then
-takes the Spark fan-out, recomputing the batch. The other has the gate
-closed and goes to the Spark fan-out at once. The difference is what
-the aborted collect costs.
+the shipped cap: its collect stops at cap + 1 rows (it counts every
+row, valid or not) and the surge then takes the Spark fan-out. The
+other has the gate closed and goes to the Spark fan-out at once. The
+difference is what the aborted collect costs.
 
 After one warm-up call each, the two sides run in interleaved pairs;
 the figure per side is the median ``process_batch`` wall time. Each
