@@ -6,6 +6,7 @@ import datetime as dt
 import json
 import re
 import struct
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
@@ -39,8 +40,6 @@ def _write_both(session, df, tmp_path):
 
 def _lines(path):
     """Every JSON line under ``path``, ``failed_at`` cut out, sorted."""
-    from pathlib import Path
-
     out = []
     for f in Path(path).rglob("part-*.json"):
         out.extend(re.sub(r',"failed_at":"[^"]*"', "", line) for line in f.read_text().splitlines())
@@ -48,8 +47,6 @@ def _lines(path):
 
 
 def _assert_same(session, spark_dir, driver_dir):
-    from pathlib import Path
-
     got, want = read_dlq(session, driver_dir), read_dlq(session, spark_dir)
     assert got.schema == want.schema
     rows = lambda df: sorted(  # noqa: E731
